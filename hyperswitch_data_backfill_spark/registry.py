@@ -107,15 +107,28 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # n_rows coalesce; stream_pgwire_tail's stall-class verification
 # before the bounded restart. Round-16 prepends are cleared — all 19
 # are green in CORRECTNESS_r16 on their reshaped implementations.
+# Wire-leg pass: implementations changed under these driver-checkable
+# keys. Every pgwire read now goes through PgConnection's buffered
+# message reader, and Spark scans decode columnar Arrow batches
+# (pgwire_scan_*, pipeline_pg_to_kafka, the pgwire tail and CDC
+# streams); CRC-32C is lane-parallel and _recv_frame fills a
+# preallocated buffer (every kafka-wire produce, fetch and stream key
+# below). Round-17 prepends are cleared — all eight have r17 records on
+# their reshaped implementations.
 _WINDOW_PREPEND: tuple[str, ...] = (
-    "graph_pagerank",
-    "neardup_cosine_lsh",
-    "neardup_cosine_recall_floor",
-    "dedup_semantic_clusters",
-    "dedup_exact",
-    "pipeline_corpus_build",
-    "profile_columns",
+    "pgwire_scan_orders",
+    "pgwire_scan_embeddings",
+    "pgwire_scan_props",
+    "pipeline_pg_to_kafka",
     "stream_pgwire_tail",
+    "kafka_wire_v2_roundtrip",
+    "kafka_wire_fetch_roundtrip",
+    "stream_pgwire_cdc",
+    "kafka_wire_roundtrip",
+    "kafka_wire_routed_roundtrip",
+    "stream_kafka_wire_tumbling",
+    "stream_kafka_wire_tumbling_parallel",
+    "stream_cdc_kafka_maintained",
 )
 
 _CORRECTNESS_RE = re.compile(r"CORRECTNESS_r(\d+)\.json")
@@ -144,60 +157,60 @@ def _shipped_evidence_rounds() -> list[int]:
 # matches neither and fails.
 _WINDOW_EVIDENCE_ROUND: int = max(_shipped_evidence_rounds(), default=0)
 
-# ROUND-17-OPTIMIZATION WINDOW = rotation output at evidence pin r16
-# with the eight changed-implementation prepends above, then the r12
-# cohort oldest-evidence-first and the r13 tail.
+# WIRE-LEG WINDOW = rotation output at evidence pin r17 with the
+# thirteen changed-implementation prepends above, then the r13 and r14
+# cohorts oldest-evidence-first.
 _DRIVER_WINDOW: list[str] = [
-    "graph_pagerank",  # green r16
-    "neardup_cosine_lsh",  # rows_only r12
-    "neardup_cosine_recall_floor",  # green r12
-    "dedup_semantic_clusters",  # green r16
-    "dedup_exact",  # green r15
-    "pipeline_corpus_build",  # green r16
-    "profile_columns",  # green r16
-    "stream_pgwire_tail",  # green r16
-    "join_asof_tolerance",  # green r12
-    "join_broadcast",  # green r12
-    "join_skew_salted",  # green r12
-    "join_skew_split",  # green r12
-    "join_smj",  # green r12
-    "layout_zonemap",  # green r12
-    "neardup_levenshtein",  # green r12
-    "sample_temperature_mix",  # green r12
-    "sim_ivf_recall_floor",  # green r12
-    "sim_ivf_trained",  # rows_only r12
-    "sim_ivf_trained_recall_floor",  # green r12
-    "sim_ivfpq_recall_floor",  # green r12
-    "udf_decrypt",  # green r12
-    "win_session",  # green r12
-    "win_sliding",  # green r12
-    "agg_corr_moments",  # green r13
-    "agg_unpivot",  # green r13
-    "array_ops",  # green r13
-    "cdc_apply_changes",  # green r13
-    "compact_latest",  # green r13
-    "date_trunc_bucket",  # green r13
-    "dedup_audio_ehash",  # green r13
-    "dedup_image_dhash",  # green r13
-    "dedup_minhash",  # rows_only r13
-    "emb_pq_quantize",  # rows_only r13
-    "exists_subquery",  # green r13
-    "filter_between",  # green r13
-    "filter_conj",  # green r13
-    "filter_eq",  # green r13
-    "join_anti",  # green r13
-    "join_asof_forward",  # green r13
-    "join_full_outer",  # green r13
-    "join_left",  # green r13
-    "join_range",  # green r13
-    "join_semi",  # green r13
-    "json_variant_extract",  # green r13
-    "kafka_wire_roundtrip",  # green r13
-    "kafka_wire_routed_roundtrip",  # green r13
-    "layout_zorder",  # green r13
-    "limit_k",  # green r13
-    "multimodal_png_roundtrip",  # green r13
-    "multimodal_wav_roundtrip",  # green r13
+    "pgwire_scan_orders",  # green r15
+    "pgwire_scan_embeddings",  # green r15
+    "pgwire_scan_props",  # green r15
+    "pipeline_pg_to_kafka",  # green r15
+    "stream_pgwire_tail",  # green r17
+    "kafka_wire_v2_roundtrip",  # green r15
+    "kafka_wire_fetch_roundtrip",  # green r15
+    "stream_pgwire_cdc",  # green r16
+    "kafka_wire_roundtrip",  # green r17
+    "kafka_wire_routed_roundtrip",  # green r17
+    "stream_kafka_wire_tumbling",  # green r15
+    "stream_kafka_wire_tumbling_parallel",  # green r14
+    "stream_cdc_kafka_maintained",  # green r15
+    "paginate_window",  # green r13
+    "project_subset",  # green r13
+    "remap_columns",  # green r13
+    "sample_stable_split",  # green r13
+    "scd2_apply",  # green r13
+    "seq_pattern_funnel",  # green r13
+    "seq_pattern_funnel_sessioned",  # green r13
+    "sim_topk_recall_floor",  # green r13
+    "text_collapse_runs",  # green r13
+    "tpch_q3_topk",  # green r13
+    "ts_gapfill",  # green r13
+    "win_ntile",  # green r13
+    "win_time_weighted_avg",  # green r13
+    "decontam_ngram",  # green r14
+    "dedup_exact_hashkey",  # green r14
+    "emb_centroid_per_label",  # green r14
+    "emb_quantize_int8",  # green r14
+    "emb_random_projection",  # green r14
+    "funnel_steps",  # green r14
+    "json_extract",  # green r14
+    "json_extract_agg",  # green r14
+    "json_serialize",  # green r14
+    "kafka_payload_shape",  # green r14
+    "map_props_stats",  # green r14
+    "math_money",  # green r14
+    "merge_upsert",  # green r14
+    "multimodal_audio_rms",  # green r14
+    "multimodal_frame_sample",  # green r14
+    "multimodal_resize_mean",  # green r14
+    "pack_sequences",  # green r14
+    "pipeline_backfill_job",  # green r14
+    "pipeline_clean_corpus",  # green r14
+    "sample_stratified_fixed",  # green r14
+    "scalar_subquery_avg",  # green r14
+    "scan_customer_page",  # green r14
+    "scan_orders",  # green r14
+    "set_except",  # green r14
 ]
 
 

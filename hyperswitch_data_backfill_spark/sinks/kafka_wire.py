@@ -605,21 +605,26 @@ def parse_produce_response_v0(frame: bytes) -> dict[str, dict[int, tuple[int, in
 
 # -------------------------------------------------------------- producer
 
+def _recv_into(sock: socket.socket, view: memoryview) -> None:
+    """Fill ``view`` completely from ``sock``."""
+    got = 0
+    while got < len(view):
+        n = sock.recv_into(view[got:])
+        if not n:
+            raise ConnectionError("broker closed connection mid-frame")
+        got += n
+
+
 def _recv_frame(sock: socket.socket) -> bytes:
-    hdr = b""
-    while len(hdr) < 4:
-        chunk = sock.recv(4 - len(hdr))
-        if not chunk:
-            raise ConnectionError("broker closed connection mid-frame")
-        hdr += chunk
+    """One size-prefixed frame (the int32 size itself stripped)."""
+    hdr = bytearray(4)
+    _recv_into(sock, memoryview(hdr))
     (n,) = struct.unpack(">i", hdr)
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(min(65536, n - len(buf)))
-        if not chunk:
-            raise ConnectionError("broker closed connection mid-frame")
-        buf += chunk
-    return buf
+    if n < 0:
+        raise ValueError(f"negative frame size {n}")
+    buf = bytearray(n)
+    _recv_into(sock, memoryview(buf))
+    return bytes(buf)
 
 
 def produce_rows(

@@ -45,6 +45,7 @@ import io
 import socket
 import struct
 
+import numpy as np
 from pyspark.sql import DataFrame
 
 from hyperswitch_data_backfill_spark.registry import register
@@ -63,8 +64,22 @@ _MAGIC_V2 = 2
 
 # ------------------------------------------------------------- CRC-32C
 # Castagnoli polynomial 0x1EDC6F41 (reflected 0x82F63B78), init/xorout
-# 0xFFFFFFFF — RFC 3720 §B.4. Table-driven; the published check vector
+# 0xFFFFFFFF — RFC 3720 §B.4; the published check vector
 # crc32c(b"123456789") == 0xE3069283 is pinned in tests.
+#
+# A CRC without init/xorout is linear over GF(2): the register after
+# A||B is shift(crc(A), len(B)) ^ crc(B), where shift(r, k) runs the
+# register over k zero bytes. Long inputs are therefore cut into equal
+# lanes whose registers advance together, one numpy table step per
+# 4-byte word column, and the lane registers are folded pairwise up a
+# binary tree, each level shifting the left halves by its lane length.
+# shift(r, k) is itself linear in r, so for each k = 2**i one table per
+# register byte holds it (_CRC32C_SHIFT[i]). The init value is folded
+# in by inverting the first four message bytes (equivalent for a
+# table-driven reflected CRC); leading zero padding leaves an
+# init-free register at 0, which is what makes padding and odd lane
+# counts free. Inputs shorter than _CRC32C_SHORT keep the bytewise walk,
+# which beats the numpy set-up cost there.
 
 _CRC32C_TABLE: list[int] = []
 for _n in range(256):
@@ -73,12 +88,57 @@ for _n in range(256):
         _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
     _CRC32C_TABLE.append(_c)
 
+_CRC32C_LANE = 32      # bytes per lane: a power of two, a multiple of 4
+_CRC32C_SHORT = 1024   # below this many bytes the bytewise walk is faster
+
+
+def _crc32c_shift(regs: np.ndarray, tables: np.ndarray) -> np.ndarray:
+    """Apply a per-byte shift table set (4 x 256) to little-endian u32
+    registers: XOR of one table lookup per register byte."""
+    b = regs.view(np.uint8).reshape(-1, 4)
+    return (tables[0][b[:, 0]] ^ tables[1][b[:, 1]]
+            ^ tables[2][b[:, 2]] ^ tables[3][b[:, 3]])
+
+
+def _crc32c_shift_tables(levels: int) -> list[np.ndarray]:
+    """[i] = tables shifting a register over 2**i zero bytes."""
+    table = np.array(_CRC32C_TABLE, dtype="<u4")
+    regs = (np.arange(256, dtype="<u4")
+            << (8 * np.arange(4, dtype="<u4"))[:, None])
+    out = [table[regs & 0xFF] ^ (regs >> 8)]   # one zero byte
+    for _ in range(levels - 1):                # 2**(i+1) = 2**i twice
+        out.append(_crc32c_shift(out[-1].reshape(-1), out[-1]).reshape(4, 256))
+    return out
+
+
+# 2**48 bytes of lanes: far past any frame a 32-bit length can carry
+_CRC32C_SHIFT = _crc32c_shift_tables(48)
+
 
 def crc32c(data: bytes) -> int:
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = _CRC32C_TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFF
+    n = len(data)
+    if n < _CRC32C_SHORT:
+        crc = 0xFFFFFFFF
+        for b in data:
+            crc = _CRC32C_TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
+        return crc ^ 0xFFFFFFFF
+    pad = -n % _CRC32C_LANE
+    buf = np.zeros(pad + n, dtype=np.uint8)
+    buf[pad:] = np.frombuffer(data, dtype=np.uint8)
+    buf[pad:pad + 4] ^= 0xFF                   # the 0xFFFFFFFF init
+    words = buf.view("<u4").reshape(-1, _CRC32C_LANE // 4).T.copy()
+    step = _CRC32C_SHIFT[2]                    # a word is 4 bytes
+    regs = np.zeros(words.shape[1], dtype="<u4")
+    for column in words:
+        regs = _crc32c_shift(regs ^ column, step)
+    level = _CRC32C_LANE.bit_length() - 1      # lane length = 2**level
+    while len(regs) > 1:
+        if len(regs) & 1:                      # a leading zero lane
+            regs = np.concatenate((np.zeros(1, dtype="<u4"), regs))
+        regs = (_crc32c_shift(regs[0::2].copy(), _CRC32C_SHIFT[level])
+                ^ regs[1::2])
+        level += 1
+    return int(regs[0]) ^ 0xFFFFFFFF
 
 
 # ------------------------------------------------- varint / zigzag

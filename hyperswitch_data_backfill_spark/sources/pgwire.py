@@ -13,14 +13,24 @@ is a from-spec implementation of the public wire protocol:
   Formats" chapter): StartupMessage, Authentication (trust, cleartext,
   md5, **SCRAM-SHA-256** per RFC 5802/7677 — pg15's default password
   auth), simple Query, RowDescription/DataRow text-format decoding,
-  COPY IN/OUT subprotocol, ErrorResponse surfacing.
+  COPY IN/OUT subprotocol, ErrorResponse surfacing. Every read of a
+  connection goes through its one ``_MessageReader``: large
+  ``recv_into`` calls into a reusable buffer, messages cut from
+  offsets in it (the same bytes over TLS).
 - **A Spark DataSource** (``format("pgwire")``): range-partitioned
   parallel reads (one InputPartition per key slice, the same keyset
   semantics as sources/jdbc.py), every executor task opening its own
   wire connection — plus planning-time predicate pushdown: supported
   filters are compiled into the per-slice SQL so Postgres scans only
   matching rows, and everything is also kept as residual so Spark
-  re-applies row-level (can never under-filter).
+  re-applies row-level (can never under-filter). A slice reaches
+  Spark as pyarrow RecordBatches, not rows: DataRows stay raw wire
+  bytes until a batch of them is cut, every column is split out of
+  all its rows at once (numpy over the field headers), and each
+  column becomes one Arrow array — by Arrow's own casts for text,
+  integers, floats and timestamp, by the per-value decoders for the
+  other types. Row tuples (``PgConnection.query_stream``) remain for
+  driver-side probes, the streaming tail and CDC.
 - **An executor-parallel writer** (``write_pgwire``): foreachPartition
   → per-partition wire connection → ``COPY ... FROM STDIN`` text
   frames. No driver-side collect on the load path.
@@ -56,6 +66,8 @@ import tempfile
 import time
 from dataclasses import dataclass
 from datetime import date, datetime
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
@@ -96,25 +108,102 @@ class PgProtocolError(RuntimeError):
 # ------------------------------------------------------------ low-level IO
 
 
-def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise PgProtocolError(
-                f"connection closed mid-message ({len(buf)}/{n} bytes)")
-        buf.extend(chunk)
-    return bytes(buf)
+_RECV_BYTES = 1 << 16  # initial buffer; grows to the largest message/batch
+_I32 = struct.Struct(">i")
+_DATA_ROW = ord("D")
 
 
-def _read_message(sock: socket.socket) -> tuple[bytes, bytes]:
-    """One backend message: (type byte, payload). Length includes itself."""
-    head = _recv_exact(sock, 5)
-    mtype = head[:1]
-    (length,) = struct.unpack(">i", head[1:5])
-    if length < 4:
-        raise PgProtocolError(f"message length {length} < 4")
-    return mtype, _recv_exact(sock, length - 4)
+class _MessageReader:
+    """Backend messages cut out of one socket's byte stream.
+
+    Each ``recv_into`` fills a reusable buffer with as much as the
+    kernel (or the TLS layer) holds, and messages are parsed from
+    offsets in it — one syscall per buffer, not two per message. The
+    buffer grows to fit the largest message, or the largest raw
+    DataRow batch while one is being cut (``data_rows``).
+    """
+
+    def __init__(self, sock: socket.socket):
+        self._sock = sock
+        self._buf = bytearray(_RECV_BYTES)
+        self._start = 0  # first unread byte
+        self._end = 0    # one past the last received byte
+        self._keep = 0   # first byte a compaction must preserve
+
+    def buffered(self) -> int:
+        """Bytes received but not yet consumed."""
+        return self._end - self._start
+
+    def _need(self, n: int) -> None:
+        """Block until ``n`` unread bytes are buffered."""
+        while self._end - self._start < n:
+            missing = n - (self._end - self._start)
+            room = max(missing, _RECV_BYTES // 4)
+            if len(self._buf) - self._end < room:
+                live = self._buf[self._keep:self._end]
+                if len(live) + room > len(self._buf):
+                    self._buf = bytearray(
+                        max(len(live) + room, 2 * len(self._buf)))
+                self._buf[:len(live)] = live
+                self._start -= self._keep
+                self._end = len(live)
+                self._keep = 0
+            with memoryview(self._buf) as view:
+                got = self._sock.recv_into(view[self._end:])
+            if not got:
+                raise PgProtocolError(
+                    f"connection closed mid-message "
+                    f"({self._end - self._start}/{n} bytes)")
+            self._end += got
+
+    def take(self, n: int) -> bytes:
+        """The next ``n`` raw bytes (the one-byte SSLRequest answer)."""
+        self._keep = self._start
+        self._need(n)
+        out = bytes(self._buf[self._start:self._start + n])
+        self._start += n
+        return out
+
+    def message(self) -> tuple[bytes, bytes]:
+        """One backend message: (type byte, payload). Length includes
+        itself."""
+        self._keep = self._start
+        self._need(5)
+        (length,) = _I32.unpack_from(self._buf, self._start + 1)
+        if length < 4:
+            raise PgProtocolError(f"message length {length} < 4")
+        self._need(1 + length)
+        s = self._start
+        self._start = s + 1 + length
+        return bytes(self._buf[s:s + 1]), bytes(self._buf[s + 5:s + 1 + length])
+
+    def data_rows(self, limit: int):
+        """Up to ``limit`` consecutive DataRow messages, uncopied until
+        the batch is cut: ``(region, starts, ends)`` — one uint8 array
+        holding the messages back to back and the offsets of each
+        payload in it — or None when the next message is not a DataRow
+        (it stays unread)."""
+        self._keep = self._start
+        starts: list[int] = []
+        ends: list[int] = []
+        while len(starts) < limit:
+            self._need(5)
+            s = self._start
+            if self._buf[s] != _DATA_ROW:
+                break
+            (length,) = _I32.unpack_from(self._buf, s + 1)
+            if length < 4:
+                raise PgProtocolError(f"message length {length} < 4")
+            self._need(1 + length)
+            s = self._start  # _need may have moved the bytes
+            starts.append(s + 5 - self._keep)
+            ends.append(s + 1 + length - self._keep)
+            self._start = s + 1 + length
+        if not starts:
+            return None
+        region = np.frombuffer(
+            self._buf, np.uint8, self._start - self._keep, self._keep).copy()
+        return region, np.array(starts), np.array(ends)
 
 
 def _send_message(sock: socket.socket, mtype: bytes, payload: bytes) -> None:
@@ -373,6 +462,92 @@ class PgColumn:
         return _OID_SPARK[self.type_oid][1]
 
 
+# ---------------------------------------------------------- Arrow batches
+
+# Rows per RecordBatch a Spark scan task yields.
+_ARROW_BATCH_ROWS = 8192
+
+# OIDs whose text form Arrow's string casts parse to the same values as
+# the per-value decoders: text-likes, integers, float8, float4 (cast
+# straight to float32, which is what widening then narrowing gives) and
+# timestamp (ISO, no zone). Every other OID decodes per value.
+_ARROW_CAST_OIDS = frozenset({
+    _OID_TEXT, 18, 19, 114, 3802, 2950, 3220, 2249, _OID_BPCHAR,
+    _OID_VARCHAR, _OID_INT2, _OID_INT4, _OID_INT8, 26, _OID_FLOAT4,
+    _OID_FLOAT8, _OID_TIMESTAMP,
+})
+
+_WORD = np.arange(4)
+
+
+def _split_columns(region, starts, ends, ncols: int) -> list[tuple]:
+    """Cut a raw DataRow batch (``_MessageReader.data_rows``) into
+    columns without a per-row loop: one vectorised pass per column over
+    every row's field header. Per column: (value offsets in ``region``,
+    lengths, NULL mask)."""
+    counts = region[starts].astype(np.int64) << 8 | region[starts + 1]
+    if (counts != ncols).any():
+        raise PgProtocolError(
+            f"DataRow field count != {ncols} RowDescription columns")
+    pos = starts + 2
+    out = []
+    for _ in range(ncols):
+        if (pos + 4 > ends).any():
+            raise PgProtocolError("DataRow ends inside a field header")
+        n = region[pos[:, None] + _WORD].view(">i4")[:, 0].astype(np.int64)
+        if (n < -1).any():
+            raise PgProtocolError("negative DataRow field length")
+        null = n == -1
+        lengths = np.where(null, 0, n)
+        pos = pos + 4
+        out.append((pos, lengths, null))
+        pos = pos + lengths
+    if (pos != ends).any():
+        raise PgProtocolError("DataRow fields do not fill the message")
+    return out
+
+
+def _text_array(region, offsets, lengths, null):
+    """One column's text-format values as a pyarrow large_binary array
+    (gathered into one buffer; NULLs masked)."""
+    import pyarrow as pa
+
+    bounds = np.zeros(len(offsets) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=bounds[1:])
+    gather = np.repeat(offsets - bounds[:-1], lengths) + np.arange(bounds[-1])
+    validity = (pa.py_buffer(np.packbits(~null, bitorder="little"))
+                if null.any() else None)
+    return pa.Array.from_buffers(
+        pa.large_binary(), len(offsets),
+        [validity, pa.py_buffer(bounds), pa.py_buffer(region[gather])],
+        null_count=int(null.sum()))
+
+
+def _arrow_decoder(column: PgColumn, field, target):
+    """text-format large_binary array → array of the Spark field's
+    Arrow type ``target``: Arrow's own casts where they parse the text
+    exactly as ``column.decoder()`` does, else the per-value decoder
+    then the conversion Spark itself applies to Python values a
+    reader yields (so values match the row path exactly)."""
+    import pyarrow as pa
+
+    if (column.type_oid in _ARROW_CAST_OIDS
+            and field.dataType.simpleString() == column.spark_ddl_type()):
+        return lambda raw: raw.cast(pa.large_string()).cast(target)
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+
+    to_spark = LocalDataToArrowConversion._create_converter(field.dataType)
+    decode = column.decoder()
+
+    def per_value(raw):
+        return pa.array(
+            [to_spark(None if v is None else decode(v.decode("utf-8")))
+             for v in raw.to_pylist()],
+            type=target)
+
+    return per_value
+
+
 # ------------------------------------------------------------- connection
 
 
@@ -409,6 +584,7 @@ class PgConnection:
     ):
         self._sock = socket.create_connection((host, port), timeout=timeout)
         self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._rx = _MessageReader(self._sock)
         self.parameters: dict[str, str] = {}
         try:
             if ssl_mode != "disable":
@@ -429,7 +605,7 @@ class PgConnection:
                 f"ssl_mode must be disable|require|verify-ca, "
                 f"got {ssl_mode!r}")
         self._sock.sendall(struct.pack(">ii", 8, _SSL_REQUEST_CODE))
-        answer = _recv_exact(self._sock, 1)
+        answer = self._rx.take(1)
         if answer != b"S":
             raise PgError(
                 {"M": f"server refused SSL (answered {answer!r}) but "
@@ -445,7 +621,12 @@ class PgConnection:
         else:
             ctx.check_hostname = False
             ctx.verify_mode = _ssl.CERT_NONE
+        if self._rx.buffered():
+            # bytes that arrived before the handshake were never
+            # encrypted: refuse them, as libpq does (CVE-2021-23222)
+            raise PgProtocolError("unencrypted data after the SSL answer")
         self._sock = ctx.wrap_socket(self._sock, server_hostname=host)
+        self._rx = _MessageReader(self._sock)
 
     # -- session bootstrap
 
@@ -470,7 +651,7 @@ class PgConnection:
         payload = struct.pack(">i", _PROTOCOL_V3) + params
         self._sock.sendall(struct.pack(">i", len(payload) + 4) + payload)
         while True:
-            mtype, body = _read_message(self._sock)
+            mtype, body = self._rx.message()
             if mtype == b"E":
                 raise PgError(_parse_error_fields(body))
             if mtype == b"R":
@@ -520,7 +701,7 @@ class PgConnection:
                 self._sock, b"p",
                 _cstring("SCRAM-SHA-256")
                 + struct.pack(">i", len(initial)) + initial)
-            mtype, sbody = _read_message(self._sock)
+            mtype, sbody = self._rx.message()
             if mtype == b"E":
                 raise PgError(_parse_error_fields(sbody))
             (scode,) = struct.unpack(">i", sbody[:4])
@@ -529,7 +710,7 @@ class PgConnection:
                     f"expected SASLContinue, got {mtype!r}/{scode}")
             final = cont(sbody[4:].decode("utf-8"))
             _send_message(self._sock, b"p", final.encode("utf-8"))
-            mtype, sbody = _read_message(self._sock)
+            mtype, sbody = self._rx.message()
             if mtype == b"E":
                 raise PgError(_parse_error_fields(sbody))
             (scode,) = struct.unpack(">i", sbody[:4])
@@ -543,56 +724,85 @@ class PgConnection:
     # -- simple query protocol
 
     def query_stream(self, sql: str):
-        """Run ``sql`` and yield (columns, row_iterator).
+        """Run ``sql`` and return (columns, row_iterator).
 
         ``row_iterator`` yields one tuple of DECODED Python values per
-        DataRow, parsed incrementally off the socket — a slice scan
-        holds one row in memory at a time, never the result set.
+        DataRow (the ``_OID_SPARK`` decoders), cut from the connection's
+        receive buffer as the result arrives — memory holds one buffer
+        of rows, never the result set. This is the row path for
+        driver-side probes, the stream reader and CDC; Spark scans take
+        ``query_batches`` instead.
         """
-        _send_message(self._sock, b"Q", _cstring(sql))
-        columns: list[PgColumn] | None = None
-        while True:
-            mtype, body = _read_message(self._sock)
-            if mtype == b"T":
-                columns = self._parse_row_description(body)
-                break
-            if mtype == b"C":  # e.g. a DDL statement: no row set
-                columns = []
-                break
-            if mtype == b"E":
-                self._drain_to_ready()
-                raise PgError(_parse_error_fields(body))
-            if mtype == b"Z":
-                return [], iter(())
-            if mtype in (b"N", b"S"):
-                continue
-            raise PgProtocolError(f"unexpected message {mtype!r} for query")
+        columns = self._start_query(sql)
+        if not columns:
+            return [], iter(())
         decoders = [c.decoder() for c in columns]
 
         def rows():
             while True:
-                mtype, body = _read_message(self._sock)
+                mtype, body = self._rx.message()
                 if mtype == b"D":
                     yield self._decode_data_row(body, decoders)
-                elif mtype == b"C":
-                    continue
-                elif mtype == b"E":
-                    self._drain_to_ready()
-                    raise PgError(_parse_error_fields(body))
-                elif mtype == b"Z":
+                elif self._result_done(mtype, body):
                     return
-                elif mtype in (b"N", b"S", b"T"):
-                    continue
-                else:
-                    raise PgProtocolError(
-                        f"unexpected message {mtype!r} in result stream")
 
-        if not columns:
-            # consume through ReadyForQuery so the session is reusable
-            for _ in rows():
-                pass
-            return [], iter(())
         return columns, rows()
+
+    def query_batches(self, sql: str, max_rows: int):
+        """Run ``sql`` and return (columns, batch_iterator): the result
+        as raw cuts of up to ``max_rows`` DataRows each
+        (``_MessageReader.data_rows``), left undecoded for the columnar
+        decode in ``PgWireReader.read``."""
+        columns = self._start_query(sql)
+        if not columns:
+            return [], iter(())
+
+        def batches():
+            while True:
+                batch = self._rx.data_rows(max_rows)
+                if batch is not None:
+                    yield batch
+                elif self._result_done(*self._rx.message()):
+                    return
+
+        return columns, batches()
+
+    def _start_query(self, sql: str) -> list[PgColumn]:
+        """Send ``sql`` as a simple Query and read through its
+        RowDescription. [] when it returns no row set (e.g. DDL); the
+        session is then already back at ReadyForQuery."""
+        _send_message(self._sock, b"Q", _cstring(sql))
+        while True:
+            mtype, body = self._rx.message()
+            if mtype == b"T":
+                return self._parse_row_description(body)
+            if mtype == b"C":
+                # consume through ReadyForQuery so the session is reusable
+                while True:
+                    mtype, body = self._rx.message()
+                    if mtype != b"D" and self._result_done(mtype, body):
+                        return []
+            if mtype == b"E":
+                self._drain_to_ready()
+                raise PgError(_parse_error_fields(body))
+            if mtype == b"Z":
+                return []
+            if mtype in (b"N", b"S"):
+                continue
+            raise PgProtocolError(f"unexpected message {mtype!r} for query")
+
+    def _result_done(self, mtype: bytes, body: bytes) -> bool:
+        """A non-DataRow message inside a result stream: True at
+        ReadyForQuery, raise on ErrorResponse, skip the rest."""
+        if mtype == b"Z":
+            return True
+        if mtype == b"E":
+            self._drain_to_ready()
+            raise PgError(_parse_error_fields(body))
+        if mtype in (b"C", b"N", b"S", b"T"):
+            return False
+        raise PgProtocolError(
+            f"unexpected message {mtype!r} in result stream")
 
     def query(self, sql: str) -> tuple[list[PgColumn], list[tuple]]:
         cols, rows = self.query_stream(sql)
@@ -603,7 +813,7 @@ class PgConnection:
 
     def _drain_to_ready(self) -> None:
         while True:
-            mtype, _body = _read_message(self._sock)
+            mtype, _body = self._rx.message()
             if mtype == b"Z":
                 return
 
@@ -644,7 +854,7 @@ class PgConnection:
         """``COPY ... FROM STDIN`` (text format): stream ``lines`` (str,
         no trailing newline) as CopyData frames. Returns rows copied."""
         _send_message(self._sock, b"Q", _cstring(sql))
-        mtype, body = _read_message(self._sock)
+        mtype, body = self._rx.message()
         if mtype == b"E":
             self._drain_to_ready()
             raise PgError(_parse_error_fields(body))
@@ -661,7 +871,7 @@ class PgConnection:
         _send_message(self._sock, b"c", b"")  # CopyDone
         copied = 0
         while True:
-            mtype, body = _read_message(self._sock)
+            mtype, body = self._rx.message()
             if mtype == b"C":
                 tag = body.rstrip(b"\x00").decode()
                 if tag.startswith("COPY "):
@@ -681,7 +891,7 @@ class PgConnection:
         """``COPY ... TO STDOUT`` (text format): yield one decoded text
         line per row (caller splits on tabs)."""
         _send_message(self._sock, b"Q", _cstring(sql))
-        mtype, body = _read_message(self._sock)
+        mtype, body = self._rx.message()
         if mtype == b"E":
             self._drain_to_ready()
             raise PgError(_parse_error_fields(body))
@@ -689,7 +899,7 @@ class PgConnection:
             raise PgProtocolError(f"expected CopyOutResponse, got {mtype!r}")
         tail = b""
         while True:
-            mtype, body = _read_message(self._sock)
+            mtype, body = self._rx.message()
             if mtype == b"d":
                 data = tail + body
                 *lines, tail = data.split(b"\n")
@@ -972,6 +1182,7 @@ class PgWireReader(DataSourceReader):
     bounds a parallelism hint, not a filter."""
 
     def __init__(self, schema: StructType, options: dict):
+        self._schema = schema
         self._options = options
         self._conn = _conn_kwargs(options)
         self._columns = _resolve_columns(options)
@@ -1050,9 +1261,33 @@ class PgWireReader(DataSourceReader):
         return sql
 
     def read(self, partition: PgWirePartition):
+        """Run the slice's SQL on a fresh connection and yield it as
+        ``pyarrow.RecordBatch``es of up to ``_ARROW_BATCH_ROWS`` rows
+        whose schema is exactly ``to_arrow_schema(schema)``, which
+        Spark takes without its per-value conversion. Rows stay raw
+        wire bytes until a batch is cut (``query_batches``); each
+        column is then split out of every row at once and decoded by
+        ``_arrow_decoder``."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(self._schema)
         with PgConnection(**self._conn) as conn:
-            _cols, rows = conn.query_stream(partition.sql)
-            yield from rows
+            columns, batches = conn.query_batches(
+                partition.sql, _ARROW_BATCH_ROWS)
+            if columns and len(columns) != len(target):
+                raise PgProtocolError(
+                    f"slice returned {len(columns)} columns, the schema "
+                    f"has {len(target)}")
+            decoders = [
+                _arrow_decoder(c, f, t) for c, f, t in
+                zip(columns, self._schema.fields, target.types)]
+            for region, starts, ends in batches:
+                cut = _split_columns(region, starts, ends, len(columns))
+                yield pa.RecordBatch.from_arrays(
+                    [d(_text_array(region, *c))
+                     for d, c in zip(decoders, cut)],
+                    schema=target)
 
 
 def _filter_to_sql(f) -> str | None:
@@ -1778,7 +2013,10 @@ def _tail_stall_not_engine_side(
             f"stall with only {len(srv)}/{expected} rows committed "
             "server-side — not the engine-stall class the restart remedies"
         )
-    stranded = sorted(k for k in (srv - sunk) if sunk and k < max(sunk))
+    stranded = []
+    if sunk:
+        cursor = max(sunk)
+        stranded = sorted(k for k in srv - sunk if k < cursor)
     if stranded:
         return (
             f"{len(stranded)} committed rows stranded BELOW the live "

@@ -61,7 +61,6 @@ from hyperswitch_data_backfill_spark.sources.pgwire import (
     _check_ident,
     _conn_kwargs,
     _cstring,
-    _read_message,
     _send_message,
 )
 
@@ -232,7 +231,7 @@ class PgReplicationConnection(PgConnection):
             f"(proto_version '1', publication_names '\"{publication}\"')")
         _send_message(self._sock, b"Q", _cstring(sql))
         while True:
-            mtype, body = _read_message(self._sock)
+            mtype, body = self._rx.message()
             if mtype == b"W":  # CopyBothResponse
                 return
             if mtype == b"E":
@@ -250,14 +249,17 @@ class PgReplicationConnection(PgConnection):
 
     def poll_copy_data(self, quiet_s: float):
         """One CopyBoth frame, or None if the socket stays quiet for
-        ``quiet_s``. Readability is tested with select() BEFORE any
-        byte is consumed, so a quiet poll can never desync the stream
+        ``quiet_s``. Bytes the connection's reader already holds are
+        parsed at once (select() cannot see them); otherwise
+        readability is tested with select() BEFORE any byte is
+        consumed, so a quiet poll can never desync the stream
         mid-message. Returns ('w', wal_start, wal_end, payload) for
         XLogData, ('k', wal_end, reply_requested) for keepalives."""
-        ready, _, _ = select.select([self._sock], [], [], quiet_s)
-        if not ready:
-            return None
-        mtype, body = _read_message(self._sock)
+        if not self._rx.buffered():
+            ready, _, _ = select.select([self._sock], [], [], quiet_s)
+            if not ready:
+                return None
+        mtype, body = self._rx.message()
         if mtype != b"d":
             raise PgProtocolError(
                 f"unexpected message {mtype!r} in CopyBoth stream")
@@ -298,7 +300,7 @@ class PgReplicationConnection(PgConnection):
         """CopyDone → drain to ReadyForQuery: back to command mode."""
         _send_message(self._sock, b"c", b"")
         while True:
-            mtype, _body = _read_message(self._sock)
+            mtype, _body = self._rx.message()
             if mtype == b"Z":
                 return
             # server's own CopyDone / CopyData still in flight /

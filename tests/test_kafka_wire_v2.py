@@ -45,6 +45,56 @@ def test_crc32c_published_vectors():
     assert crc32c(b"123456789") == 0xE3069283
     assert crc32c(b"") == 0x00000000
     assert crc32c(b"\x00" * 32) == 0x8A9136AA  # RFC 3720: 32 zeros
+    assert crc32c(b"\xff" * 32) == 0x62A8AB43  # RFC 3720: 32 ones
+    assert crc32c(bytes(range(32))) == 0x46DD794E  # incrementing
+    assert crc32c(bytes(range(31, -1, -1))) == 0x113FDB5C  # decrementing
+
+
+def _crc32c_bytewise(data: bytes) -> int:
+    """Reference: the plain RFC 3720 bytewise table walk, built here
+    independently of the module under test."""
+    table = []
+    for n in range(256):
+        for _ in range(8):
+            n = (n >> 1) ^ 0x82F63B78 if n & 1 else n >> 1
+        table.append(n)
+    crc = 0xFFFFFFFF
+    for b in data:
+        crc = table[(crc ^ b) & 0xFF] ^ (crc >> 8)
+    return crc ^ 0xFFFFFFFF
+
+
+def _random_bytes(n: int, seed: int) -> bytes:
+    import numpy as np
+
+    return np.random.default_rng(seed).integers(
+        0, 256, n, dtype=np.uint8).tobytes()
+
+
+def test_crc32c_equals_bytewise_around_lane_and_cutover_sizes():
+    """Every length across the bytewise/lane cut-over and the first
+    lane-count doublings, so partial lanes (lengths that are not a
+    multiple of the lane width) and odd lane counts are all walked."""
+    from hyperswitch_data_backfill_spark.sinks.kafka_wire_v2 import (
+        _CRC32C_LANE,
+        _CRC32C_SHORT,
+    )
+
+    data = _random_bytes(_CRC32C_SHORT + 9 * _CRC32C_LANE, 7)
+    for n in range(_CRC32C_SHORT - 8, len(data) + 1):
+        assert crc32c(data[:n]) == _crc32c_bytewise(data[:n]), n
+    zeros = bytes(4 * _CRC32C_SHORT)
+    assert crc32c(zeros) == _crc32c_bytewise(zeros)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.one_of(st.integers(0, 8192), st.integers(0, 2 * 1024 * 1024)),
+       st.integers(0, 2**32 - 1))
+def test_crc32c_equals_bytewise_property(n, seed):
+    data = _random_bytes(n, seed)
+    want = _crc32c_bytewise(data)
+    assert crc32c(data) == want
+    assert crc32c(bytearray(data)) == crc32c(memoryview(data)) == want
 
 
 # --------------------------------------------------------- varint / zigzag

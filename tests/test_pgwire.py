@@ -842,6 +842,322 @@ class TestTls:
             (i, f"v{i}") for i in range(12)]
 
 
+# ------------------------------------------------------ Arrow batch reads
+
+# One table carrying every _OID_SPARK type (record and void ride the
+# query as expressions: no column can store them) and the edge values
+# the per-value decoders handle: NULL, empty text, tab/newline/non-ASCII
+# text, NaN/±Infinity, float4 widening, fractional seconds, timestamptz
+# offsets, numeric typmods and NaN, arrays.
+_EVERY_DDL = """CREATE TABLE every_t (
+    k bigint, b boolean, by bytea, i2 smallint, i4 int, t text,
+    ch "char", nm name, o oid, js json, jb jsonb, u uuid, l pg_lsn,
+    f4 real, f8 double precision, bp char(5), vc varchar(20), d date,
+    ts timestamp, tz timestamptz, n numeric, n2 numeric(12,2),
+    ab boolean[], ai2 smallint[], ai4 int[], ai8 bigint[], af4 real[],
+    af8 float8[], at text[], avc varchar[], abp char(2)[], ad date[],
+    ats timestamp[], ajs json[], ajb jsonb[], au uuid[],
+    an numeric(10,3)[])"""
+_EVERY_ROWS = [
+    "(1, true, '\\x00ff', -32768, 2147483647, E'tab\\there\\nnl é ☃',"
+    " 'x', 'nm1', 4294967295, '{\"a\": 1}', '{\"b\": [1,2]}',"
+    " 'A0EEBC99-9C0B-4EF8-BB6D-6BB9BD380A11', '16/B374D848', 'NaN',"
+    " 'Infinity', 'ab', 'vc', '2024-02-29', '2024-01-02 03:04:05.123456',"
+    " '2024-01-02 03:04:05.5+05:30', 'NaN', 12.5, '{t,f,NULL}', '{1,-2}',"
+    " '{3,NULL}', '{9223372036854775807}', '{0.1,NaN,-Infinity}',"
+    " '{1e300,-0}', ARRAY['a,b', 'q\"x', NULL, ''], '{x}', '{ab,c}',"
+    " '{2020-01-01}', '{\"2020-01-01 00:00:00.000001\"}',"
+    " ARRAY['{\"k\":1}'::json], ARRAY['[1]'::jsonb],"
+    " ARRAY['a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11'::uuid], '{1.5,NULL}')",
+    "(2, false, '\\x', 0, 0, '', '', '', 0, 'null', 'null',"
+    " '00000000-0000-0000-0000-000000000000', '0/0', '-Infinity',"
+    " '-Infinity', '', '', '0099-01-01', '1999-12-31 23:59:59.000001',"
+    " '1970-01-01 00:00:00-08', 123456789012345678.123456789, -0.01,"
+    " '{}', '{}', '{}', '{}', '{}', '{}', '{}', '{}', '{}', '{}', '{}',"
+    " '{}', '{}', '{}', '{}')",
+    "(3, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,"
+    " NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,"
+    " NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,"
+    " NULL, NULL, NULL)",
+    "(4, NULL, '\\xdeadbeef', 7, 8, 'plain', 'y', 'n', 1, '[]', '{}',"
+    " NULL, NULL, 0.1, 0.1, 'abcde', 'x y', '2024-06-01',"
+    " '2024-06-01 00:00:00', '2024-06-01 00:00:00.25-03', 1e-5, 99.99,"
+    " NULL, NULL, NULL, NULL, '{3.4028235e38}', NULL,"
+    " ARRAY['back\\\\slash', '{}'],"
+    " NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)",
+]
+_EVERY_SQL = ("SELECT *, pg_sleep(0) AS vd, ROW(k, t) AS rec"
+              " FROM every_t ORDER BY k")
+
+
+def _same_value(arrow, row):
+    """Arrow-path value vs the row path's decoded value: NaN equals
+    NaN, and numeric NaN is NULL (Spark maps Decimal('NaN') to NULL
+    for every Python value a reader yields)."""
+    import math
+    from decimal import Decimal
+
+    if isinstance(row, list):
+        return (isinstance(arrow, list) and len(arrow) == len(row)
+                and all(map(_same_value, arrow, row)))
+    if isinstance(row, float) and math.isnan(row):
+        return isinstance(arrow, float) and math.isnan(arrow)
+    if isinstance(row, Decimal) and row.is_nan():
+        return arrow is None
+    return arrow == row and type(arrow) is type(row)
+
+
+@pytest.fixture(scope="module")
+def every_type(pg):
+    with pg.connect() as conn:
+        conn.execute(_EVERY_DDL)
+        conn.execute("INSERT INTO every_t VALUES " + ", ".join(_EVERY_ROWS))
+        cols, rows = conn.query(_EVERY_SQL)
+    yield cols, rows
+    with pg.connect() as conn:
+        conn.execute("DROP TABLE every_t")
+
+
+def _arrow_read(pg, cols, sql, spark):
+    from pyspark.sql.types import StructType
+
+    from hyperswitch_data_backfill_spark.sources.pgwire import (
+        PgWirePartition,
+    )
+
+    # StructType.fromDDL needs a live session (the spark fixture)
+    schema = StructType.fromDDL(", ".join(
+        f"{c.name} {c.spark_ddl_type()}" for c in cols))
+    reader = PgWireReader(schema, {
+        "host": pg.host, "port": str(pg.port), "user": pg.user,
+        "database": pg.database, "table": "every_t"})
+    return schema, list(reader.read(PgWirePartition(sql)))
+
+
+class TestArrowBatches:
+    def test_every_oid_matches_row_path(self, pg, every_type, spark):
+        """The reader's RecordBatches carry exactly the values
+        query_stream decodes, for every type OID the source maps."""
+        from hyperswitch_data_backfill_spark.sources.pgwire import (
+            _OID_NUMERIC,
+            _OID_NUMERIC_ARRAY,
+            _OID_SPARK,
+        )
+
+        cols, rows = every_type
+        assert {c.type_oid for c in cols} == (
+            set(_OID_SPARK) | {_OID_NUMERIC, _OID_NUMERIC_ARRAY})
+        _schema, batches = _arrow_read(pg, cols, _EVERY_SQL, spark)
+        got = [tuple(r.values()) for b in batches for r in b.to_pylist()]
+        assert len(got) == len(rows) == 4
+        for g, want in zip(got, rows):
+            for c, a, w in zip(cols, g, want):
+                assert _same_value(a, w), (c.name, a, w)
+
+    def test_batch_schema_is_to_arrow_schema(self, pg, every_type, spark,
+                                             monkeypatch):
+        """Every batch has Spark's own Arrow schema for the source
+        schema, and batches are cut at _ARROW_BATCH_ROWS rows."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from hyperswitch_data_backfill_spark.sources import pgwire
+
+        monkeypatch.setattr(pgwire, "_ARROW_BATCH_ROWS", 3)
+        cols, _rows = every_type
+        schema, batches = _arrow_read(pg, cols, _EVERY_SQL, spark)
+        assert [b.num_rows for b in batches] == [3, 1]
+        for b in batches:
+            assert b.schema == to_arrow_schema(schema)
+
+    def test_schema_wider_than_slice_refused(self, pg, every_type, spark):
+        from hyperswitch_data_backfill_spark.sources.pgwire import (
+            PgProtocolError,
+        )
+
+        cols, _rows = every_type
+        with pytest.raises(PgProtocolError, match="columns"):
+            _arrow_read(pg, cols, "SELECT k FROM every_t", spark)
+
+
+def _backend_message(mtype: bytes, payload: bytes) -> bytes:
+    import struct
+
+    return mtype + struct.pack(">i", len(payload) + 4) + payload
+
+
+def _data_row(values) -> bytes:
+    import struct
+
+    out = struct.pack(">h", len(values))
+    for v in values:
+        out += struct.pack(">i", -1) if v is None else (
+            struct.pack(">i", len(v)) + v)
+    return _backend_message(b"D", out)
+
+
+class _OneByteSocket:
+    """A socket whose every read returns at most one byte."""
+
+    def __init__(self, sock):
+        self._sock = sock
+
+    def recv_into(self, view):
+        return self._sock.recv_into(view[:1])
+
+
+class _OneByteWrapped(_OneByteSocket):
+    """_OneByteSocket that otherwise behaves as the socket it wraps."""
+
+    def __getattr__(self, name):
+        return getattr(self._sock, name)
+
+
+def test_message_reader_one_byte_reads_and_row_over_buffer():
+    """The buffered reader reassembles messages delivered one byte per
+    recv, and a DataRow larger than its buffer grows the buffer rather
+    than failing; the columnar cut reproduces every value."""
+    import socket
+    import threading
+
+    from hyperswitch_data_backfill_spark.sources.pgwire import (
+        _RECV_BYTES,
+        _MessageReader,
+        _split_columns,
+        _text_array,
+    )
+
+    big = "é☃x".encode() * _RECV_BYTES  # ~2.7x the initial buffer
+    stream = (
+        _backend_message(b"N", b"\x00")
+        + _data_row([b"1", big, b""])
+        + _data_row([b"2", None, "tab\tnl\n".encode()])
+        + _data_row([None, b"v", None])
+        + _backend_message(b"C", b"SELECT 3\x00")
+        + _backend_message(b"Z", b"I"))
+    a, b = socket.socketpair()
+    sender = threading.Thread(target=a.sendall, args=(stream,))
+    sender.start()
+    try:
+        reader = _MessageReader(_OneByteSocket(b))
+        assert reader.message() == (b"N", b"\x00")
+        region, starts, ends = reader.data_rows(2)
+        assert len(starts) == 2  # the limit cuts the batch
+        rest = reader.data_rows(10)
+        assert len(rest[1]) == 1
+        assert reader.data_rows(10) is None  # CommandComplete is next
+        assert reader.message() == (b"C", b"SELECT 3\x00")
+        assert reader.message() == (b"Z", b"I")
+        assert reader.buffered() == 0
+    finally:
+        sender.join(timeout=30)
+        a.close()
+        b.close()
+    assert not sender.is_alive()
+    cols = [_text_array(region, *c).to_pylist()
+            for c in _split_columns(region, starts, ends, 3)]
+    assert cols == [[b"1", b"2"], [big, None], [b"", b"tab\tnl\n"]]
+    cols = [_text_array(rest[0], *c).to_pylist()
+            for c in _split_columns(*rest, 3)]
+    assert cols == [[None], [b"v"], [None]]
+
+
+def test_split_columns_refuses_malformed_rows():
+    """A DataRow whose field headers disagree with its length or the
+    RowDescription fails loudly instead of decoding garbage."""
+    import numpy as np
+
+    from hyperswitch_data_backfill_spark.sources.pgwire import (
+        PgProtocolError,
+        _split_columns,
+    )
+
+    def cut(body: bytes, ncols: int):
+        region = np.frombuffer(body, np.uint8)
+        _split_columns(region, np.array([0]), np.array([len(body)]), ncols)
+
+    good = _data_row([b"ab", None])[5:]
+    cut(good, 2)
+    with pytest.raises(PgProtocolError, match="field count"):
+        cut(good, 3)
+    with pytest.raises(PgProtocolError, match="fill"):
+        cut(good + b"x", 2)
+    with pytest.raises(PgProtocolError, match="header"):
+        cut(good[:-2], 2)
+    with pytest.raises(PgProtocolError, match="negative"):
+        cut(b"\x00\x01\xff\xff\xff\xfe", 1)
+
+
+def test_connection_and_reader_over_one_byte_reads(monkeypatch, spark):
+    """Startup, query_stream and the Arrow read path all go through the
+    connection's one buffered reader: a backend double whose bytes
+    arrive one per recv yields the same rows on every path."""
+    import socket
+    import struct
+    import threading
+
+    from pyspark.sql.types import StructType
+
+    from hyperswitch_data_backfill_spark.sources import pgwire
+
+    def field(name, oid):
+        return name.encode() + b"\x00" + struct.pack(">ihihih", 0, 0, oid,
+                                                       -1, -1, 0)
+
+    big = b"y" * (3 * pgwire._RECV_BYTES)
+    result = (
+        _backend_message(b"T", struct.pack(">h", 2) + field("k", 20)
+                         + field("v", 25))
+        + b"".join(_data_row([str(i).encode(), big if i == 2 else None])
+                   for i in range(5))
+        + _backend_message(b"C", b"SELECT 5\x00")
+        + _backend_message(b"Z", b"I"))
+    ready = (_backend_message(b"R", struct.pack(">i", 0))
+             + _backend_message(b"Z", b"I"))
+    listener = socket.create_server(("127.0.0.1", 0))
+
+    def serve():
+        for _ in range(2):  # query_stream's session, then the reader's
+            conn, _addr = listener.accept()
+            with conn:
+                f = conn.makefile("rb")
+                (n,) = struct.unpack(">i", f.read(4))
+                f.read(n - 4)  # StartupMessage
+                conn.sendall(ready)
+                while True:
+                    mtype = f.read(1)
+                    (n,) = struct.unpack(">i", f.read(4))
+                    f.read(n - 4)
+                    if mtype != b"Q":
+                        break  # Terminate
+                    conn.sendall(result)
+
+    server = threading.Thread(target=serve, daemon=True)
+    server.start()
+    real = socket.create_connection
+    monkeypatch.setattr(
+        pgwire.socket, "create_connection",
+        lambda *a, **kw: _OneByteWrapped(real(*a, **kw)))
+    port = listener.getsockname()[1]
+    try:
+        with pgwire.PgConnection("127.0.0.1", port, user="u",
+                                 database="d") as conn:
+            cols, rows = conn.query("SELECT k, v FROM t")
+        reader = pgwire.PgWireReader(
+            StructType.fromDDL("k bigint, v string"),
+            {"host": "127.0.0.1", "port": str(port), "table": "t"})
+        batches = list(reader.read(pgwire.PgWirePartition("SELECT k, v")))
+    finally:
+        server.join(timeout=60)
+        listener.close()
+    assert not server.is_alive()
+    assert [c.name for c in cols] == ["k", "v"]
+    want = [(i, big.decode() if i == 2 else None) for i in range(5)]
+    assert rows == want
+    assert [tuple(r.values()) for b in batches
+            for r in b.to_pylist()] == want
+
+
+
 class TestArrays:
     def test_array_literal_and_parse_units(self):
         from hyperswitch_data_backfill_spark.sources.pgwire import (

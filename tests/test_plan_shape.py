@@ -480,9 +480,10 @@ def test_lsh_pair_valve_plan_shape(spark):
     # census shares the pairing exchange: between the pairing node and
     # the census window there must be NO exchange (hash(tb) satisfies
     # the (tb[, split]) clustering of the pandas groupBy)
-    pairing_to_window = split_plan[
-        split_plan.index("FlatMapGroupsInPandas"):split_plan.index("Window")
-    ]
+    pairing_at = split_plan.find("FlatMapGroupsInPandas")
+    window_at = split_plan.find("Window")
+    assert 0 <= pairing_at < window_at, split_plan[:3000]
+    pairing_to_window = split_plan[pairing_at:window_at]
     assert "Exchange" not in pairing_to_window, pairing_to_window
     refuse_logical = (
         lsh_cosine_pairs(emb, max_bucket=None)
