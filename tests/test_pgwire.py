@@ -996,17 +996,14 @@ def _data_row(values) -> bytes:
 
 
 class _OneByteSocket:
-    """A socket whose every read returns at most one byte."""
+    """The wrapped socket, except that every read returns at most one
+    byte."""
 
     def __init__(self, sock):
         self._sock = sock
 
     def recv_into(self, view):
         return self._sock.recv_into(view[:1])
-
-
-class _OneByteWrapped(_OneByteSocket):
-    """_OneByteSocket that otherwise behaves as the socket it wraps."""
 
     def __getattr__(self, name):
         return getattr(self._sock, name)
@@ -1136,7 +1133,7 @@ def test_connection_and_reader_over_one_byte_reads(monkeypatch, spark):
     real = socket.create_connection
     monkeypatch.setattr(
         pgwire.socket, "create_connection",
-        lambda *a, **kw: _OneByteWrapped(real(*a, **kw)))
+        lambda *a, **kw: _OneByteSocket(real(*a, **kw)))
     port = listener.getsockname()[1]
     try:
         with pgwire.PgConnection("127.0.0.1", port, user="u",
