@@ -115,6 +115,10 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # preallocated buffer (every kafka-wire produce, fetch and stream key
 # below). Round-17 prepends are cleared — all eight have r17 records on
 # their reshaped implementations.
+# One-producer pass: every kafka-wire produce key below (and
+# pipeline_pg_to_kafka, the tumbling and CDC-maintained streams) now
+# produces through the one leader-routed produce_rows; the list is
+# unchanged, as each was already prepended.
 _WINDOW_PREPEND: tuple[str, ...] = (
     "pgwire_scan_orders",
     "pgwire_scan_embeddings",

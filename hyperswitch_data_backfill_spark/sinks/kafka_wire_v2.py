@@ -13,9 +13,11 @@ test vector) with the same executed-proof discipline as the v0 leg:
 
 - codec round-trips + corruption detection + hypothesis property tests
   (tests/test_kafka_wire_v2.py),
-- a producer (``produce_rows_v2`` / ``write_kafka_wire_v2``) that runs
-  the KIP-35 handshake and REQUIRES Produce ≥ v3 — refusing a v0-only
-  broker the same way the v0 producer refuses a v3-only one,
+- ``encode_produce_request_v3_parts``, the codec the one producer
+  (``kafka_wire.produce_rows``) looks up for ``wire_version=3``, and
+  ``write_kafka_wire_v2``, which drives that producer per Spark task:
+  its KIP-35 handshake REQUIRES Produce v3, refusing a v0-only broker
+  the same way ``wire_version=0`` refuses a broker without Produce v0,
 - the broker double (kafka_wire.WireBroker) now parses BOTH dialects,
   version-dispatched exactly like a real broker, storing decoded
   records in the same log either way,
@@ -42,7 +44,6 @@ from __future__ import annotations
 
 import gzip
 import io
-import socket
 import struct
 
 import numpy as np
@@ -54,9 +55,8 @@ from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
     _API_PRODUCE,
     _Reader,
     _kstring,
-    _recv_frame,
     ProduceRequest,
-    negotiate_api_versions,
+    produce_rows,
 )
 
 PRODUCE_V3 = 3
@@ -791,8 +791,8 @@ def encode_produce_request_v3_parts(
     compression: str = "none",
 ) -> bytes:
     """General Produce v3: topic → partition → messages, one record
-    batch per partition — the shape the leader-routed producer needs to
-    batch every partition a node leads into one request (mirror of
+    batch per partition — the shape the producer needs to batch every
+    partition a node leads into one request (mirror of
     kafka_wire.encode_produce_request_v0_parts)."""
     body = io.BytesIO()
     body.write(struct.pack(">hhi", _API_PRODUCE, PRODUCE_V3, correlation_id))
@@ -845,134 +845,7 @@ def parse_produce_request_v3(frame: bytes) -> ProduceRequest:
     return ProduceRequest(corr, client_id, acks, timeout_ms, records)
 
 
-def encode_produce_response_v3(
-    correlation_id: int,
-    offsets: dict[str, dict[int, tuple[int, int]]],
-    *,
-    throttle_time_ms: int = 0,
-) -> bytes:
-    """Produce v3 response: v0 + per-partition log_append_time (-1 for
-    create-time batches) + trailing throttle_time_ms."""
-    body = io.BytesIO()
-    body.write(struct.pack(">i", correlation_id))
-    body.write(struct.pack(">i", len(offsets)))
-    for topic, parts in offsets.items():
-        body.write(_kstring(topic))
-        body.write(struct.pack(">i", len(parts)))
-        for partition, (error_code, base_offset) in parts.items():
-            body.write(
-                struct.pack(">ihqq", partition, error_code, base_offset, -1)
-            )
-    body.write(struct.pack(">i", throttle_time_ms))
-    payload = body.getvalue()
-    return struct.pack(">i", len(payload)) + payload
-
-
-def parse_produce_response_v3(
-    frame: bytes,
-) -> dict[str, dict[int, tuple[int, int]]]:
-    r = _Reader(frame)
-    r.i32()                                        # correlation_id
-    out: dict[str, dict[int, tuple[int, int]]] = {}
-    for _ in range(r.i32()):
-        topic = r.string() or ""
-        for _p in range(r.i32()):
-            partition, error_code, base_offset = r.i32(), r.i16(), r.i64()
-            r.i64()                                # log_append_time
-            out.setdefault(topic, {})[partition] = (error_code, base_offset)
-    return out
-
-
 # -------------------------------------------------------- producer
-
-def produce_rows_v2(
-    rows,
-    host: str,
-    port: int,
-    *,
-    batch_size: int = 1000,
-    timeout: float = 30.0,
-    max_retries: int = 2,
-    compression: str = "none",
-) -> int:
-    """Executor-side partition produce over the v2 record-batch dialect:
-    same shape and at-least-once contract as kafka_wire.produce_rows,
-    but every flush ships ONE magic-2 RecordBatch per topic inside a
-    Produce v3 request, and the KIP-35 handshake requires the broker to
-    advertise Produce ≥ v3 (a v0-only broker raises
-    UnsupportedApiVersionError — retrying can't fix a dialect gap)."""
-    pending: list[tuple[str, bytes | None, bytes | None]] = []
-    sent = 0
-    sock: socket.socket | None = None
-    corr = 0
-
-    def connect() -> socket.socket:
-        nonlocal corr
-        s = socket.create_connection((host, port), timeout=timeout)
-        s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-        corr += 1
-        negotiate_api_versions(s, corr, required={_API_PRODUCE: PRODUCE_V3})
-        return s
-
-    def flush() -> None:
-        nonlocal sock, corr, sent
-        if not pending:
-            return
-        by_topic: dict[str, list[tuple[bytes | None, bytes | None]]] = {}
-        for topic, key, value in pending:
-            by_topic.setdefault(topic, []).append((key, value))
-        last_err: Exception | None = None
-        for _attempt in range(max_retries + 1):
-            try:
-                if sock is None:
-                    sock = connect()
-                corr += 1
-                sock.sendall(
-                    encode_produce_request_v3(
-                        corr, by_topic, compression=compression
-                    )
-                )
-                resp = parse_produce_response_v3(_recv_frame(sock))
-                errs = [
-                    (t, p, ec)
-                    for t, parts in resp.items()
-                    for p, (ec, _off) in parts.items()
-                    if ec != 0
-                ]
-                if errs:
-                    raise IOError(f"broker error codes on produce: {errs}")
-                sent += len(pending)
-                pending.clear()
-                return
-            except (OSError, ConnectionError, IOError) as e:
-                last_err = e
-                if sock is not None:
-                    try:
-                        sock.close()
-                    except OSError:
-                        pass
-                    sock = None
-        raise IOError(
-            f"produce to {host}:{port} failed after {max_retries + 1} attempts"
-        ) from last_err
-
-    try:
-        for row in rows:
-            key = row["key"]
-            value = row["value"]
-            pending.append((
-                row["topic"],
-                key.encode("utf-8") if isinstance(key, str) else key,
-                value.encode("utf-8") if isinstance(value, str) else value,
-            ))
-            if len(pending) >= batch_size:
-                flush()
-        flush()
-    finally:
-        if sock is not None:
-            sock.close()
-    return sent
-
 
 def write_kafka_wire_v2(
     records: DataFrame,
@@ -982,12 +855,16 @@ def write_kafka_wire_v2(
     batch_size: int = 1000,
     compression: str = "none",
 ) -> None:
-    """Produce a key/value/topic frame as magic-2 record batches — the
-    modern-default twin of kafka_wire.write_kafka_wire. Every executor
-    task opens its own connection; nothing is collected to the driver."""
+    """Produce a key/value/topic frame as Produce v3 requests carrying
+    magic-2 record batches — the modern-default twin of
+    kafka_wire.write_kafka_wire, over the same producer
+    (``kafka_wire.produce_rows`` with ``wire_version=3``): every executor
+    task bootstraps from ``(host, port)`` and produces to its
+    partitions' leaders; nothing is collected to the driver."""
     records.foreachPartition(
-        lambda rows: produce_rows_v2(
-            rows, host, port, batch_size=batch_size, compression=compression
+        lambda rows: produce_rows(
+            rows, host, port, batch_size=batch_size, wire_version=PRODUCE_V3,
+            compression=compression,
         )
     )
 
@@ -1030,13 +907,8 @@ def kafka_wire_v2_roundtrip(spark, sf_dir: str) -> DataFrame:
 
     frame = _intent_payload_frame(spark, sf_dir, where="o_orderkey % 400 = 13")
     with WireBroker() as broker:
-        port = broker.port  # bind the int: the closure must not capture
-        # the broker object itself (thread locks are unpicklable)
-        frame.repartition(4).foreachPartition(
-            lambda rows: produce_rows_v2(
-                rows, "127.0.0.1", port, batch_size=256, compression="gzip"
-            )
-        )
+        write_kafka_wire_v2(frame.repartition(4), "127.0.0.1", broker.port,
+                            batch_size=256, compression="gzip")
         # same at-least-once dedup rationale as kafka_wire_roundtrip
         decoded = sorted({
             (key.decode("utf-8"), value.decode("utf-8"), topic)

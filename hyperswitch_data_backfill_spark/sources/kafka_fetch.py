@@ -2124,7 +2124,7 @@ def _stream_wire_tumbling(
     from hyperswitch_data_backfill_spark.sinks.kafka import event_frame
     from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
         WireCluster,
-        write_kafka_wire_routed,
+        write_kafka_wire,
     )
     from hyperswitch_data_backfill_spark.streaming.pipeline import (
         decode_event_stream,
@@ -2158,7 +2158,7 @@ def _stream_wire_tumbling(
     name = f"wire_tumbling_{uuid.uuid4().hex[:8]}"
     with WireCluster(n_brokers=2, topics={"events-stream": 4}) as cluster:
         host, port = cluster.bootstrap
-        write_kafka_wire_routed(frame.repartition(4), host, port, batch_size=512)
+        write_kafka_wire(frame.repartition(4), host, port, batch_size=512)
         records = read_kafka_wire_stream(
             spark, host, port, "events-stream", parallel=parallel)
         events = decode_event_stream(

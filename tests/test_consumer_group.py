@@ -14,7 +14,7 @@ import pytest
 
 from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
     WireCluster,
-    produce_rows_routed,
+    produce_rows,
 )
 from hyperswitch_data_backfill_spark.sources import kafka_fetch as kf
 
@@ -266,7 +266,7 @@ def test_stream_readers_split_partitions_and_fail_over():
     with WireCluster(n_brokers=2, topics={"ev": 4},
                      rebalance_barrier_s=3.0) as cluster:
         host, port = cluster.bootstrap
-        produce_rows_routed(iter(_rows("ev", 40)), host, port, batch_size=8)
+        produce_rows(iter(_rows("ev", 40)), host, port, batch_size=8)
 
         r1 = _reader(port)
         start1 = r1.initialOffset()
@@ -291,7 +291,7 @@ def test_stream_readers_split_partitions_and_fail_over():
         t.start()
         time.sleep(0.3)  # let r2 enter the join barrier
         # r1's next read heartbeats → rebalance → rejoin → 2 partitions
-        produce_rows_routed(iter(_rows("ev", 40, prefix="w2-")),
+        produce_rows(iter(_rows("ev", 40, prefix="w2-")),
                             host, port, batch_size=8)
         rows1b, end1b = r1.read(end1)
         rows1b = list(rows1b)
@@ -376,7 +376,7 @@ def test_unknown_partition_freezes_at_cursor_not_hwm():
     with WireCluster(n_brokers=1, topics={"ev": 2},
                      rebalance_barrier_s=2.0) as cluster:
         host, port = cluster.bootstrap
-        produce_rows_routed(iter(_rows("ev", 20)), host, port, batch_size=5)
+        produce_rows(iter(_rows("ev", 20)), host, port, batch_size=5)
         # a previous owner consumed partition 0 up to offset 4 only
         with kf.WireConsumerGroup(host, port, "cg-f", ["ev"]) as seeder:
             seeder.join()
@@ -424,7 +424,7 @@ def test_two_live_streaming_queries_split_topic(spark):
     with WireCluster(n_brokers=2, topics={"ev": 4},
                      rebalance_barrier_s=3.0) as cluster:
         host, port = cluster.bootstrap
-        produce_rows_routed(iter(_rows("ev", 40)), host, port, batch_size=8)
+        produce_rows(iter(_rows("ev", 40)), host, port, batch_size=8)
 
         def start(name):
             stream = read_kafka_wire_stream(
@@ -463,7 +463,7 @@ def test_two_live_streaming_queries_split_topic(spark):
                 # coverage (raw counts overshoot: the group-commit lag
                 # means q2 legally re-reads up to one batch q1 already
                 # consumed — the documented at-least-once handover)
-                produce_rows_routed(iter(_rows("ev", 40, prefix="w2-")),
+                produce_rows(iter(_rows("ev", 40, prefix="w2-")),
                                     host, port, batch_size=8)
                 deadline = time.time() + 90
                 while True:
@@ -484,7 +484,7 @@ def test_two_live_streaming_queries_split_topic(spark):
                 # consuming anything proves the new generation is live
                 # for both members).
                 end2 = frontier(sink_rows(n1, n2))
-                produce_rows_routed(iter(_rows("ev", 40, prefix="w3-")),
+                produce_rows(iter(_rows("ev", 40, prefix="w3-")),
                                     host, port, batch_size=8)
                 deadline = time.time() + 90
                 while True:

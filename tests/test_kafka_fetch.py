@@ -22,7 +22,6 @@ from hyperswitch_data_backfill_spark.sinks.kafka_wire_v2 import (
     encode_record_batch_v2,
     parse_produce_request_v3,
     parse_record_batches_v2,
-    produce_rows_v2,
 )
 from hyperswitch_data_backfill_spark.sources import kafka_fetch as kf
 from tests.conftest import SF_DIR, assert_oracle_match
@@ -219,10 +218,7 @@ def test_cluster_fetch_leadership_refusal_and_routing():
     partition from its leader only."""
     with WireCluster(n_brokers=2, topics={"pay": 4}) as cluster:
         host, port = cluster.bootstrap
-        from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-            produce_rows_routed,
-        )
-        produce_rows_routed(iter(_rows("pay", 80)), host, port, batch_size=16)
+        produce_rows(iter(_rows("pay", 80)), host, port, batch_size=16)
         out = kf.consume_topic(host, port, "pay", version=4)
         assert len(out) == 80
         assert {p for p, _o, _k, _v in out} == {0, 1, 2, 3}
@@ -254,16 +250,12 @@ def test_consumer_handshake_refuses_incapable_broker():
 # -------------------------------------------------------- Spark source
 
 def test_kafkawire_batch_source_partition_parallel(spark):
-    from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-        write_kafka_wire_routed,
-    )
-
     df = spark.createDataFrame(
         _rows("pay", 120), "key string, value string, topic string"
     ).selectExpr("key", "value", "topic")
     with WireCluster(n_brokers=2, topics={"pay": 4}) as cluster:
         host, port = cluster.bootstrap
-        write_kafka_wire_routed(df.repartition(4), host, port, batch_size=32)
+        write_kafka_wire(df.repartition(4), host, port, batch_size=32)
         for version in (0, 4):
             got = kf.read_kafka_wire(spark, host, port, "pay", version=version)
             assert got.schema.simpleString() == (
@@ -288,11 +280,11 @@ def test_kafkawire_stream_source_incremental_and_replay(spark):
     )
 
     with WireBroker() as b:
-        produce_rows_v2(
+        produce_rows(
             iter([{"key": f"k{i}",
                    "value": f'{{"user_id": {i}, "amount": {i * 10}}}',
                    "topic": "ev"} for i in range(20)]),
-            "127.0.0.1", b.port, batch_size=8)
+            "127.0.0.1", b.port, batch_size=8, wire_version=3)
         stream = read_kafka_wire_stream(spark, "127.0.0.1", b.port, "ev",
                                         version=4)
         typed = decode_event_stream(stream, "user_id bigint, amount bigint")
@@ -388,15 +380,11 @@ def test_kafkawire_filter_pushdown_prunes_partitions_and_offsets(spark):
     dialed), an offset lower bound lifts each fetch start — and because
     every filter stays residual, results are exactly the plain filtered
     read (prune = optimization, never semantics)."""
-    from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-        write_kafka_wire_routed,
-    )
-
     df = spark.createDataFrame(
         _rows("pay", 160), "key string, value string, topic string")
     with WireCluster(n_brokers=2, topics={"pay": 4}) as cluster:
         host, port = cluster.bootstrap
-        write_kafka_wire_routed(df.repartition(4), host, port, batch_size=32)
+        write_kafka_wire(df.repartition(4), host, port, batch_size=32)
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
         src = kf.read_kafka_wire(spark, host, port, "pay", version=4)
 
@@ -431,13 +419,9 @@ def test_stream_reader_routes_to_leaders_in_cluster(spark):
     multi-node cluster the non-led partitions refused with NOT_LEADER.
     Both _offsets and _rows_between must resolve each partition's
     current leader from metadata, like the batch planner."""
-    from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-        produce_rows_routed,
-    )
-
     with WireCluster(n_brokers=2, topics={"pay": 4}) as cluster:
         host, port = cluster.bootstrap
-        produce_rows_routed(iter(_rows("pay", 60)), host, port, batch_size=16)
+        produce_rows(iter(_rows("pay", 60)), host, port, batch_size=16)
         reader = kf.KafkaWireStreamReader(
             {"host": host, "port": str(port), "topic": "pay"})
         start = reader.initialOffset()
@@ -508,13 +492,9 @@ def test_read_span_follows_not_leader_to_true_leader():
     """A span planned against a stale/wrong leader address recovers:
     NOT_LEADER → Metadata refresh (any node answers for the cluster) →
     re-dial the true leader → full span."""
-    from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-        produce_rows_routed,
-    )
-
     with WireCluster(n_brokers=2, topics={"pay": 2}) as cluster:
         host, port = cluster.bootstrap
-        produce_rows_routed(iter(_rows("pay", 40)), host, port, batch_size=8)
+        produce_rows(iter(_rows("pay", 40)), host, port, batch_size=8)
         # how many landed in partition 0, and who leads it
         true_leader = cluster.meta.leaders["pay"][0]
         wrong = next(b for b in cluster.brokers if b.node_id != true_leader)
@@ -735,13 +715,9 @@ def test_parallel_stream_reader_cluster_e2e(spark):
     per-batch admission cap."""
     import time
 
-    from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-        produce_rows_routed,
-    )
-
     with WireCluster(n_brokers=2, topics={"pay": 4}) as cluster:
         host, port = cluster.bootstrap
-        produce_rows_routed(iter(_rows("pay", 120)), host, port, batch_size=32)
+        produce_rows(iter(_rows("pay", 120)), host, port, batch_size=32)
         kf.register_kafka_wire_source(spark)
         stream = (
             spark.readStream.format("kafkawire")
@@ -819,10 +795,6 @@ def test_read_span_recovers_via_bootstrap_when_planned_leader_dead():
     inside the guarded loop, metadata falls back to the bootstrap
     address carried in the partition plan, and the fetch follows the
     partition to its live leader."""
-    from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-        produce_rows_routed,
-    )
-
     # a port that is guaranteed closed: bind, grab, release
     dead = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
     dead.bind(("127.0.0.1", 0))
@@ -831,7 +803,7 @@ def test_read_span_recovers_via_bootstrap_when_planned_leader_dead():
 
     with WireCluster(n_brokers=2, topics={"pay": 2}) as cluster:
         host, port = cluster.bootstrap
-        produce_rows_routed(iter(_rows("pay", 40)), host, port, batch_size=8)
+        produce_rows(iter(_rows("pay", 40)), host, port, batch_size=8)
         leader = cluster.meta.leaders["pay"][0]
         n0 = len(cluster.brokers[leader]._logs[("pay", 0)].messages)
         assert n0 > 0

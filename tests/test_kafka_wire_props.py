@@ -21,13 +21,14 @@ from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
     encode_api_versions_response_v0,
     encode_metadata_request_v0,
     encode_metadata_response_v0,
+    _kstring,
     encode_produce_request_v0_parts,
-    encode_produce_response_v0,
+    encode_produce_response,
     parse_api_versions_response_v0,
     parse_metadata_request_v0,
     parse_metadata_response_v0,
     parse_produce_request_v0,
-    parse_produce_response_v0,
+    parse_produce_response,
     partition_for_key,
 )
 
@@ -140,10 +141,27 @@ def test_api_versions_response_roundtrip(corr, versions, error_code):
                st.tuples(st.sampled_from([0, 2, 6]),
                          st.integers(min_value=0, max_value=2**62)),
                min_size=1, max_size=4),
-           min_size=1, max_size=3))
-def test_produce_response_roundtrip(corr, offsets):
-    frame = encode_produce_response_v0(corr, offsets)
-    assert parse_produce_response_v0(frame[4:]) == offsets
+           min_size=1, max_size=3),
+       version=st.integers(min_value=0, max_value=3),
+       throttle_ms=st.integers(min_value=0, max_value=2**31 - 1))
+def test_produce_response_roundtrip(corr, offsets, version, throttle_ms):
+    """Every Produce response version round-trips, and its bytes are the
+    protocol guide's layout: v0 (partition, error_code, base_offset);
+    v1 + trailing throttle_time_ms; v2 and v3 + per-partition
+    log_append_time, -1 for create-time records."""
+    frame = encode_produce_response(corr, offsets, version=version,
+                                    throttle_time_ms=throttle_ms)
+    assert parse_produce_response(frame[4:], version) == offsets
+    body = struct.pack(">ii", corr, len(offsets))
+    for topic, parts in offsets.items():
+        body += _kstring(topic) + struct.pack(">i", len(parts))
+        for partition, (error_code, base_offset) in parts.items():
+            body += struct.pack(">ihq", partition, error_code, base_offset)
+            if version >= 2:
+                body += struct.pack(">q", -1)
+    if version >= 1:
+        body += struct.pack(">i", throttle_ms)
+    assert frame == struct.pack(">i", len(body)) + body
 
 
 @settings(max_examples=200, deadline=None)

@@ -2,35 +2,33 @@
 (sinks/kafka_wire_v2.py, r11 verdict stretch item 8): CRC-32C pinned to
 its published vector, varint/zigzag property round-trips, record-batch
 codec + corruption detection, version-dispatched broker double, the
-handshake refusal in BOTH directions, and the driver-hashed fixture.
+producer's ``wire_version=3`` dialect, and the driver-hashed fixture.
+The producer tests both dialects share (retry, exhausted retries,
+handshake refusal in both directions, Spark-task multiset) are
+parametrized over ``wire_version`` in test_kafka_wire.py.
 """
 
 from __future__ import annotations
 
 import pytest
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-    _API_PRODUCE,
     _Reader,
-    UnsupportedApiVersionError,
     WireBroker,
+    encode_produce_response,
+    parse_produce_response,
     produce_rows,
 )
 from hyperswitch_data_backfill_spark.sinks.kafka_wire_v2 import (
     crc32c,
     decode_varint,
     encode_produce_request_v3,
-    encode_produce_response_v3,
     encode_record_batch_v2,
     encode_varint,
     kafka_wire_v2_roundtrip,
     parse_produce_request_v3,
-    parse_produce_response_v3,
     parse_record_batch_v2,
-    produce_rows_v2,
-    write_kafka_wire_v2,
 )
 from tests.conftest import SF_DIR, assert_oracle_match
 
@@ -199,8 +197,8 @@ def test_produce_v3_codec_roundtrip():
     assert req.correlation_id == 9
     assert req.acks == 1 and req.timeout_ms == 1234
     assert req.records == {t: {0: msgs} for t, msgs in batches.items()}
-    resp = encode_produce_response_v3(9, {"t-a": {0: (0, 17)}})
-    assert parse_produce_response_v3(resp[4:]) == {"t-a": {0: (0, 17)}}
+    resp = encode_produce_response(9, {"t-a": {0: (0, 17)}}, version=3)
+    assert parse_produce_response(resp[4:], 3) == {"t-a": {0: (0, 17)}}
 
 
 # --------------------------------------------------- broker double dispatch
@@ -214,71 +212,25 @@ def test_broker_double_accepts_both_dialects_same_log():
     record batches land in the same decoded log."""
     with WireBroker() as broker:
         produce_rows(iter(_rows(5, "mixed")), "127.0.0.1", broker.port)
-        produce_rows_v2(iter(_rows(5, "mixed")), "127.0.0.1", broker.port)
+        produce_rows(iter(_rows(5, "mixed")), "127.0.0.1", broker.port,
+                     wire_version=3)
         records = broker.records("mixed")
     assert records == [
         (f"k{i}".encode(), f"v{i}".encode()) for i in range(5)
     ] * 2
 
 
-def test_v2_producer_refuses_v0_only_broker():
-    """The dialect gap fails FAST through the KIP-35 handshake (not as a
-    parse error after bytes are shipped), and in both directions."""
-    v0_only = {_API_PRODUCE: (0, 0), 3: (0, 0), 18: (0, 0)}
-    with WireBroker(api_versions=v0_only) as broker:
-        with pytest.raises(UnsupportedApiVersionError, match="api_key=0 v3"):
-            produce_rows_v2(iter(_rows(1)), "127.0.0.1", broker.port,
-                            max_retries=0)
-        assert broker.records("v2-topic") == []
-
-
 def test_v2_gzip_produce_lands_decoded():
     """The compressed path end-to-end: gzip batches over TCP, broker
     decompresses inside the batch parser, same decoded log."""
     with WireBroker() as broker:
-        sent = produce_rows_v2(
+        sent = produce_rows(
             iter(_rows(8, "gz")), "127.0.0.1", broker.port,
-            compression="gzip",
+            wire_version=3, compression="gzip",
         )
         records = broker.records("gz")
     assert sent == 8
     assert records == [(f"k{i}".encode(), f"v{i}".encode()) for i in range(8)]
-
-
-def test_v2_transient_error_retries_to_exactly_one_copy():
-    """Same at-least-once envelope as the v0 leg: error + drop, then
-    reconnect-retry, exactly one copy in the log."""
-    with WireBroker(fail_requests=1) as broker:
-        sent = produce_rows_v2(
-            iter(_rows()), "127.0.0.1", broker.port, max_retries=2
-        )
-        records = broker.records("v2-topic")
-        connections = broker.connections
-    assert sent == 10
-    assert records == [(f"k{i}".encode(), f"v{i}".encode()) for i in range(10)]
-    assert connections == 2
-
-
-def test_write_kafka_wire_v2_multipartition_exact_multiset(spark):
-    """Parallel executor tasks produce magic-2 batches; the decoded
-    multiset equals the input exactly."""
-    df = (
-        spark.range(0, 100)
-        .select(
-            F.concat(F.lit("key-"), F.col("id")).alias("key"),
-            F.concat(F.lit("value-"), F.col("id")).alias("value"),
-            F.lit("t-v2").alias("topic"),
-        )
-        .repartition(4)
-    )
-    with WireBroker() as broker:
-        write_kafka_wire_v2(df, "127.0.0.1", broker.port, batch_size=32)
-        got = sorted(broker.records("t-v2"))
-        connections = broker.connections
-    assert got == sorted(
-        (f"key-{i}".encode(), f"value-{i}".encode()) for i in range(100)
-    )
-    assert connections == 4
 
 
 # ---------------------------------------------------------------- fixture
@@ -381,7 +333,6 @@ def test_routed_producer_speaks_v2_dialect():
     from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
         WireCluster,
         partition_for_key,
-        produce_rows_routed,
     )
 
     rows = [
@@ -390,7 +341,7 @@ def test_routed_producer_speaks_v2_dialect():
     ]
     with WireCluster(n_brokers=2, topics={"routed-v2": 4}) as cluster:
         host, port = cluster.bootstrap
-        sent = produce_rows_routed(
+        sent = produce_rows(
             iter(rows), host, port, wire_version=3, compression="gzip"
         )
         landed = cluster.all_records()
@@ -407,14 +358,10 @@ def test_routed_producer_speaks_v2_dialect():
 
 
 def test_routed_v2_rejects_bad_knobs():
-    from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
-        produce_rows_routed,
-    )
-
     with pytest.raises(ValueError, match="wire_version"):
-        produce_rows_routed(iter([]), "127.0.0.1", 1, wire_version=2)
+        produce_rows(iter([]), "127.0.0.1", 1, wire_version=2)
     with pytest.raises(ValueError, match="compression"):
-        produce_rows_routed(iter([]), "127.0.0.1", 1, compression="gzip")
+        produce_rows(iter([]), "127.0.0.1", 1, compression="gzip")
 
 
 def test_snappy_zstd_batches_attributes_and_corruption():
@@ -445,8 +392,9 @@ def test_snappy_zstd_wire_roundtrip_over_tcp():
         rows = [{"key": f"k{i}", "value": f"v{i}" * 40, "topic": f"t-{codec}"}
                 for i in range(25)]
         with WireBroker() as b:
-            sent = produce_rows_v2(iter(rows), "127.0.0.1", b.port,
-                                   batch_size=10, compression=codec)
+            sent = produce_rows(iter(rows), "127.0.0.1", b.port,
+                                batch_size=10, wire_version=3,
+                                compression=codec)
             assert sent == 25
             got = b.records(f"t-{codec}")
             assert got == [(f"k{i}".encode(), (f"v{i}" * 40).encode())

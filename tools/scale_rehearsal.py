@@ -574,9 +574,6 @@ def wire_mode() -> None:
         WireBroker,
         produce_rows,
     )
-    from hyperswitch_data_backfill_spark.sinks.kafka_wire_v2 import (
-        produce_rows_v2,
-    )
     from hyperswitch_data_backfill_spark.sources import kafka_fetch as kf
 
     base = int(sys.argv[2]) if len(sys.argv) > 2 else 5000
@@ -595,8 +592,8 @@ def wire_mode() -> None:
             produce_rows(iter(rows), "127.0.0.1", b.port, batch_size=1000)
             p0 = _t.time() - t0
             t0 = _t.time()
-            produce_rows_v2(iter(rows_v2), "127.0.0.1", b.port,
-                            batch_size=1000)
+            produce_rows(iter(rows_v2), "127.0.0.1", b.port,
+                         batch_size=1000, wire_version=3)
             p3 = _t.time() - t0
             t0 = _t.time()
             got0 = kf.consume_topic("127.0.0.1", b.port, "w0", version=0)
