@@ -163,8 +163,6 @@ def partition_for_key(key: bytes | None, num_partitions: int, fallback: int = 0)
     ``toPositive(murmur2(key)) % num_partitions``; null keys (which real
     clients sticky-route) deterministically to ``fallback`` so the
     double's logs stay assertable."""
-    if num_partitions == 1:
-        return 0                        # what ``x % 1`` is for every key
     if key is None:
         return fallback % num_partitions
     return (murmur2(key) & 0x7FFFFFFF) % num_partitions
@@ -619,7 +617,8 @@ def produce_rows(
        live connection or else a known broker (the bootstrap first);
     2. partitions the new records by
        ``toPositive(murmur2(key)) % num_partitions`` (Kafka's default
-       partitioner);
+       partitioner; a single-partition topic takes them whole, with no
+       per-record work);
     3. sends one multi-partition Produce request per leader node and
        checks the acks=1 response;
     4. on NOT_LEADER_FOR_PARTITION (error 6), another error code, a
@@ -662,13 +661,15 @@ def produce_rows(
         nonlocal corr
         s = conns.get(node)
         if s is None:
-            s = socket.create_connection(brokers[node], timeout=timeout)
+            # registered first, so a failed handshake's socket is closed
+            # by drop() or the final clean-up like any other
+            s = conns[node] = socket.create_connection(
+                brokers[node], timeout=timeout)
             s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             corr += 1
             negotiate_api_versions(
                 s, corr,
                 required={_API_PRODUCE: wire_version, _API_METADATA: 0})
-            conns[node] = s
         return s
 
     def drop(node: int) -> None:
@@ -719,13 +720,15 @@ def produce_rows(
         by_node: dict[int, dict[str, dict[int, Messages]]] = {}
         for (topic, partition), msgs in todo.items():
             parts = leaders.get(topic, {})
-            if partition is None:
-                split: dict[int, Messages] = {}
-                for kv in msgs:
-                    p = partition_for_key(kv[0], max(1, len(parts)))
-                    split.setdefault(p, []).append(kv)
-            else:
+            if partition is not None:
                 split = {partition: msgs}
+            elif len(parts) <= 1:
+                split = {0: msgs}  # every key's partition: x % 1 == 0
+            else:
+                split = {}
+                for kv in msgs:
+                    p = partition_for_key(kv[0], len(parts))
+                    split.setdefault(p, []).append(kv)
             for p, part_msgs in split.items():
                 node = parts.get(p)
                 if node is None:
@@ -749,7 +752,7 @@ def produce_rows(
             except OSError as e:
                 last_err = e
                 _log.warning("produce attempt %d/%d: metadata failed: %s",
-                            attempt, max_retries + 1, e)
+                             attempt, max_retries + 1, e)
                 continue
             todo = {}
             for node, batches in by_node.items():
@@ -765,8 +768,9 @@ def produce_rows(
                         raise IOError(f"broker error codes {errors}")
                 except OSError as e:
                     last_err = e
-                    _log.warning("produce attempt %d/%d to node %d failed: %s",
-                                attempt, max_retries + 1, node, e)
+                    _log.warning(
+                        "produce attempt %d/%d to node %d failed: %s",
+                        attempt, max_retries + 1, node, e)
                     if set(errors.values()) != {_ERR_NOT_LEADER}:
                         # no answer, or an error other than NOT_LEADER:
                         # resend the whole request on a fresh connection
