@@ -12,10 +12,13 @@ Argparse mirror of the reference's clap options (``main.rs:33-57``):
 
 Where the reference then runs a hand-scheduled loop nest (merchants →
 entities → batches, ``main.rs:190-313``), this CLI compiles the whole
-job declaratively (``compile_job``) and hands the physical schedule to
-Spark: ``--parallel`` becomes the number of JDBC partitions per entity
-scan, merchants become pushed-down predicates, and batches disappear
-(``fetchsize`` covers the round-trip sizing).
+job declaratively (``compile_job``) to one record frame over every
+topic and hands the physical schedule to Spark: ``--parallel`` becomes
+the number of JDBC partitions per entity scan, merchants become
+pushed-down predicates, and batches disappear (``fetchsize`` covers the
+round-trip sizing). The frame is written by ONE ``write_kafka`` action
+under the ``backfill:*`` job group, which routes each record on its
+``topic`` column, so every source table is scanned once.
 
 Extension point: ``--entities-module`` names an importable module with
 an ``ENTITIES: tuple[EntitySpec, ...]`` attribute — the analogue of the
@@ -24,8 +27,10 @@ list. Default is the built-in demo pair over the fixture tables.
 
 ``--parquet-dir`` swaps the JDBC source for the parquet fixtures (used
 by tests and dry runs; a real run reads ``[replica_database]``).
-``--dry-run`` prints per-topic record counts and a payload sample
-instead of producing to Kafka.
+``--dry-run`` prints ``topic<TAB>count<TAB>sample value`` per topic
+instead of producing to Kafka, from one ``noop`` write that carries
+per-topic aggregates through ``DataFrame.observe`` (one action, one scan
+per table, like the real run).
 """
 
 from __future__ import annotations
@@ -83,12 +88,32 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--parquet-dir", default=None,
                    help="read entity tables from <dir>/<table>.parquet instead of JDBC")
     p.add_argument("--dry-run", action="store_true",
-                   help="count + sample per topic instead of producing to Kafka")
+                   help="print each topic's record count and a sample value "
+                        "(one pass over the sources) instead of producing to Kafka")
     p.add_argument("--master-key-env", default=None,
                    help="env var holding a hex master key: decrypt enc:<hex> "
                         "config values at boot (≙ the reference's KMS secret "
                         "resolution, encryption.rs:11-186)")
     return p
+
+
+def observe_topics(records, topics: list[str]) -> dict[str, tuple[int, str | None]]:
+    """Per-topic ``(record count, sample value)`` of a key/value/topic
+    frame in ONE action: the aggregates ride a ``noop`` write through
+    ``DataFrame.observe``. The sample is the topic's smallest value
+    (None when the topic is empty)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation("dry-run")
+    aggs = []
+    for i, t in enumerate(topics):
+        on_topic = F.col("topic") == t
+        aggs += [F.count_if(on_topic).alias(f"n{i}"),
+                 F.min(F.when(on_topic, F.col("value"))).alias(f"sample{i}")]
+    records.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    got = obs.get
+    return {t: (got[f"n{i}"], got[f"sample{i}"]) for i, t in enumerate(topics)}
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
@@ -168,27 +193,30 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                         spark, src, s.merchant_col, args.parallel
                     )
 
-        frames = compile_job(tables, job,
-                             consolidated_topic=cfg.kafka.consolidated_topic)
+        consolidated = cfg.kafka.consolidated_topic
+        records = compile_job(tables, job, consolidated_topic=consolidated)["*"]
 
-        if args.dry_run:
-            for topic, frame in frames.items():
-                n = frame.count()
-                sample = frame.limit(1).collect()
-                payload = sample[0]["value"] if sample else ""
-                print(f"{topic}\t{n}\t{payload}")
-            return 0
-
-        from hyperswitch_data_backfill_spark.sinks.kafka import write_kafka
         from hyperswitch_data_backfill_spark.telemetry import (
             ProgressReporter,
             job_group,
         )
 
-        for topic, frame in frames.items():
-            with job_group(spark, f"backfill:{topic}", f"produce {topic}"), \
-                    ProgressReporter(spark, prefix=topic):
-                write_kafka(frame, cfg.kafka)
+        if args.dry_run:
+            topics = [s.topic for s in entities]
+            if consolidated is not None:
+                topics.append(consolidated)
+            topics = list(dict.fromkeys(topics))
+            with job_group(spark, "backfill:*", "dry run: count every topic"):
+                stats = observe_topics(records, topics)
+            for topic, (n, payload) in stats.items():
+                print(f"{topic}\t{n}\t{payload or ''}")
+            return 0
+
+        from hyperswitch_data_backfill_spark.sinks.kafka import write_kafka
+
+        with job_group(spark, "backfill:*", "produce every topic"), \
+                ProgressReporter(spark, prefix="backfill"):
+            write_kafka(records, cfg.kafka)
         return 0
     finally:
         if owns_session:

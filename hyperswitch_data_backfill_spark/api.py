@@ -34,6 +34,7 @@ Scale notes (the same discipline as the fixture ops):
 
 from __future__ import annotations
 
+import threading
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -1021,6 +1022,12 @@ def histogram_equidepth(
 # made generic — r12 verdict items 4/6)
 # ---------------------------------------------------------------------------
 
+# pagerank flips the session-global AQE conf for its checkpoint job;
+# the lock keeps two overlapping calls from interleaving save/restore
+# (one would save the other's "false" and restore it).
+_AQE_TOGGLE_LOCK = threading.Lock()
+
+
 def pagerank(
     edges: DataFrame,
     *,
@@ -1062,7 +1069,8 @@ def pagerank(
     deg groupBy plus another for the adjacency join. Local wall is
     measured neutral (fixture edge lists are small); at scale this
     removes per-round full-edge-list shuffles+sorts. The AQE toggle is
-    scoped to the checkpoint job and restored in a finally."""
+    scoped to the checkpoint job under a module lock, and a finally
+    restores the session's value, or unsets the key if it was unset."""
     if not 0 < damping_pct < 100:
         raise ValueError(f"damping_pct must be in (0, 100), got {damping_pct}")
     if iters < 0:
@@ -1074,15 +1082,19 @@ def pagerank(
         )
     spark = edges.sparkSession
     aqe_key = "spark.sql.adaptive.enabled"
-    aqe_prev = spark.conf.get(aqe_key, "true")
-    try:
-        spark.conf.set(aqe_key, "false")
-        ers = e.repartition("src").sortWithinPartitions("src")
-        adj = ers.join(
-            ers.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src"
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(aqe_key, aqe_prev)
+    with _AQE_TOGGLE_LOCK:
+        aqe_prev = spark.conf.get(aqe_key, None)  # None: not set in the session
+        try:
+            spark.conf.set(aqe_key, "false")
+            ers = e.repartition("src").sortWithinPartitions("src")
+            adj = ers.join(
+                ers.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src"
+            ).localCheckpoint(eager=True)
+        finally:
+            if aqe_prev is None:
+                spark.conf.unset(aqe_key)
+            else:
+                spark.conf.set(aqe_key, aqe_prev)
     nodes = adj.select("src").distinct().select(F.col("src").alias("node"))
     ranks = nodes.withColumn("pr", F.lit(base).cast("bigint"))
     teleport = int(base * (100 - damping_pct) / 100)

@@ -404,10 +404,9 @@ def lsh_cosine_pairs(
     lacked one): the per-bucket applyInPandas materializes a whole
     bucket as one pandas frame and pays block² BLAS, so a degenerate
     corpus (a million near-identical vectors share one bucket in EVERY
-    table) must not reach it unbounded. Bucket sizes come from one
-    map-side-combined count over the bucket keys (distinct keys ≤
-    tables·2^bits — broadcastable by construction at any corpus size),
-    then:
+    table) must not reach it unbounded. Every bucket's size comes from
+    a ``count(*) OVER (PARTITION BY tb)`` window on the pairing
+    shuffle's own partitioning (the census paragraph below), then:
 
     - ``max_bucket=<int>`` (default LSH_MAX_BUCKET): buckets past the
       cap are hash-SPLIT on vec_id into ceil(n/cap) sub-blocks and
@@ -419,8 +418,8 @@ def lsh_cosine_pairs(
       lands on the least informative collisions. The op survives the
       degenerate corpus instead of OOMing a task.
     - ``max_bucket=None``: refuse instead — an in-plan
-      ``assert_true(bucket_size <= LSH_MAX_BUCKET)`` fused into the
-      size join raises before the quadratic stage runs, for callers
+      ``assert_true(bucket_size <= LSH_MAX_BUCKET)`` over the window
+      count raises before the quadratic stage runs, for callers
       doing strict recall accounting who would rather re-tune bits
       than silently lose cross-split pairs.
 

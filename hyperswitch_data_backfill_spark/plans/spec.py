@@ -2,10 +2,10 @@
 
 The reference hard-codes its plan as a loop nest (``main.rs:59-321``:
 merchants → entities → batches → rows). Ours is a declarative spec
-compiled to ONE DataFrame program per entity; Catalyst plans the
-physical execution (pushdown, broadcast, partition count), and a single
-Spark job replaces the reference's O(merchants × entities × batches)
-round-trips (SURVEY §3.4).
+compiled to ONE record frame for the whole job (one lineage per entity,
+concatenated); Catalyst plans the physical execution (pushdown,
+broadcast, partition count), and a single Spark job replaces the
+reference's O(merchants × entities × batches) round-trips (SURVEY §3.4).
 
 A ``BackfillSpec`` mirrors the reference CLI (``main.rs:33-57``):
 time window (default-open bounds, F5), optional merchant allow-list,
@@ -100,27 +100,34 @@ def compile_job(
     consolidated_topic: str | None = None,
     key_dims: Mapping[str, tuple[DataFrame, str]] | None = None,
 ) -> dict[str, DataFrame]:
-    """Compile the WHOLE backfill job — every entity plus the consolidated feed.
+    """Compile the WHOLE backfill job — every entity plus the consolidated
+    feed — to ONE key/value/topic record frame.
 
     The reference's main loop (``main.rs:190-313``) runs 4 entity dumps ×
     N merchants × B batches as sequential async tasks; its consolidated
     topic (``development.toml:672``) is populated by each dump writing
-    twice. Spark-first: one declarative call produces one DataFrame per
-    entity (each an independent lineage Catalyst optimizes separately —
-    filters pushed into each scan) plus ONE ``unionByName`` frame with
-    the topic column rewritten, so the consolidated feed is a zero-copy
-    re-projection of the same scans, not a second read. At 100 TB the
-    per-entity frames are separate jobs a scheduler can run in parallel;
-    the union adds no shuffle (union is partition-concatenation in Spark).
+    every event twice. Here each entity compiles to its own lineage
+    (``compile_entity``: filters pushed into its scan); when
+    ``consolidated_topic`` is set, its topic column becomes
+    ``explode(array(entity_topic, consolidated_topic))`` with the two
+    names de-duplicated at compile time; and the entity frames are
+    concatenated by ``unionByName`` (partition concatenation, no
+    shuffle). So each source row is scanned, filtered and
+    ``to_json``-projected once and emitted once per topic it belongs to:
+    its entity topic and the consolidated topic, or once when the two
+    are the same name. Two entities that share a topic both keep their
+    rows on it. ``Generate`` runs on streams, so the frame stays
+    stream-compatible.
 
-    Returns ``{topic: frame}`` per entity, plus ``consolidated_topic``
-    mapped to the union when requested. ``key_dims`` optionally maps an
-    entity table name to ``(dimension_df, join_col)`` — the merchant
-    key-store broadcast join of ``compile_entity``.
+    Returns ``{"*": records}``: ``"*"`` marks a frame carrying every
+    topic, one action for the whole job; sinks route each row on its
+    ``topic`` column. ``key_dims`` optionally maps an entity table name
+    to ``(dimension_df, join_col)`` — the merchant key-store broadcast
+    join of ``compile_entity``.
     """
     if not job.entities:
         raise ValueError("compile_job: BackfillSpec has no entities")
-    frames: dict[str, DataFrame] = {}
+    records = None
     for spec in job.entities:
         dim = (key_dims or {}).get(spec.table)
         compiled = compile_entity(
@@ -130,19 +137,15 @@ def compile_job(
             key_dim=dim[0] if dim else None,
             key_dim_col=dim[1] if dim else None,
         )
-        # two entities may legitimately feed one topic (the reference's
-        # consolidated pattern) — union, never overwrite
-        if spec.topic in frames:
-            frames[spec.topic] = frames[spec.topic].unionByName(compiled)
-        else:
-            frames[spec.topic] = compiled
-    if consolidated_topic is not None:
-        consolidated = None
-        for frame in frames.values():
-            retopic = frame.withColumn("topic", F.lit(consolidated_topic))
-            consolidated = retopic if consolidated is None else consolidated.unionByName(retopic)
-        frames[consolidated_topic] = consolidated
-    return frames
+        if consolidated_topic is not None:
+            # a literal array per entity: Catalyst folds it, so no row
+            # builds or de-duplicates an array of its own
+            topics = dict.fromkeys([spec.topic, consolidated_topic])
+            compiled = compiled.withColumn(
+                "topic", F.explode(F.array(*[F.lit(t) for t in topics]))
+            )
+        records = compiled if records is None else records.unionByName(compiled)
+    return {"*": records}
 
 
 # --- fixture: the whole-job pipeline over orders (≙ payment_intent) and
@@ -198,14 +201,14 @@ _JOB = BackfillSpec(entities=DEMO_ENTITIES, start=_JOB_START, end=_JOB_END)
     WHERE l_shipdate BETWEEN '{_JOB_START}' AND '{_JOB_END}'
     """,
     doc="Whole-job orchestration (≙ main.rs:190-313): two entity pipelines "
-        "compiled in one call, consolidated feed as a shuffle-free "
-        "unionByName with the topic rewritten (development.toml:672).",
+        "compiled in one call to one record frame, each row exploded onto "
+        "its entity topic and the consolidated topic (development.toml:672); "
+        "this key is that frame's consolidated-topic rows.",
 )
 def pipeline_backfill_job(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables = {
         "orders": load_table(spark, sf_dir, "orders"),
         "lineitem": load_table(spark, sf_dir, "lineitem"),
     }
-    return compile_job(tables, _JOB, consolidated_topic="consolidated-events")[
-        "consolidated-events"
-    ]
+    records = compile_job(tables, _JOB, consolidated_topic="consolidated-events")["*"]
+    return records.filter(F.col("topic") == "consolidated-events")

@@ -119,7 +119,13 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # pipeline_pg_to_kafka, the tumbling and CDC-maintained streams) now
 # produces through the one leader-routed produce_rows; the list is
 # unchanged, as each was already prepended.
+# One-frame pass: pipeline_backfill_job is now the consolidated-topic
+# rows of compile_job's single exploded record frame, and
+# graph_pagerank runs api.pagerank, whose AQE toggle is now
+# lock-guarded and restores an unset conf by unsetting it.
 _WINDOW_PREPEND: tuple[str, ...] = (
+    "pipeline_backfill_job",
+    "graph_pagerank",
     "pgwire_scan_orders",
     "pgwire_scan_embeddings",
     "pgwire_scan_props",
@@ -161,10 +167,12 @@ def _shipped_evidence_rounds() -> list[int]:
 # matches neither and fails.
 _WINDOW_EVIDENCE_ROUND: int = max(_shipped_evidence_rounds(), default=0)
 
-# WIRE-LEG WINDOW = rotation output at evidence pin r17 with the
-# thirteen changed-implementation prepends above, then the r13 and r14
+# ONE-FRAME WINDOW = rotation output at evidence pin r17 with the
+# fifteen changed-implementation prepends above, then the r13 and r14
 # cohorts oldest-evidence-first.
 _DRIVER_WINDOW: list[str] = [
+    "pipeline_backfill_job",  # green r14
+    "graph_pagerank",  # green r17
     "pgwire_scan_orders",  # green r15
     "pgwire_scan_embeddings",  # green r15
     "pgwire_scan_props",  # green r15
@@ -208,13 +216,11 @@ _DRIVER_WINDOW: list[str] = [
     "multimodal_frame_sample",  # green r14
     "multimodal_resize_mean",  # green r14
     "pack_sequences",  # green r14
-    "pipeline_backfill_job",  # green r14
     "pipeline_clean_corpus",  # green r14
     "sample_stratified_fixed",  # green r14
     "scalar_subquery_avg",  # green r14
     "scan_customer_page",  # green r14
     "scan_orders",  # green r14
-    "set_except",  # green r14
 ]
 
 

@@ -150,16 +150,24 @@ def test_compile_job_two_entities_plus_consolidated(spark):
         "lineitem": load_table(spark, SF_DIR, "lineitem"),
     }
     frames = compile_job(tables, _JOB, consolidated_topic="consolidated-events")
-    assert set(frames) == {"orders-events", "lineitem-events", "consolidated-events"}
-    n_orders = frames["orders-events"].count()
-    n_lineitem = frames["lineitem-events"].count()
+    assert set(frames) == {"*"}
+    records = frames["*"]
+    by_topic = {
+        r["topic"]: r["count"] for r in records.groupBy("topic").count().collect()
+    }
+    assert set(by_topic) == {"orders-events", "lineitem-events", "consolidated-events"}
+    n_orders = by_topic["orders-events"]
+    n_lineitem = by_topic["lineitem-events"]
     assert n_orders > 0 and n_lineitem > 0
-    # consolidated = exact union of the entity frames, topic rewritten
-    assert frames["consolidated-events"].count() == n_orders + n_lineitem
-    topics = [r["topic"] for r in frames["consolidated-events"].select("topic").distinct().collect()]
-    assert topics == ["consolidated-events"]
-    # entity frames keep their own topic and the kafka record shape
-    row = frames["orders-events"].limit(1).collect()[0]
+    # consolidated = exact union of the entity rows, topic rewritten
+    assert by_topic["consolidated-events"] == n_orders + n_lineitem
+    consolidated = records.filter("topic = 'consolidated-events'")
+    entity = records.filter("topic != 'consolidated-events'")
+    assert sorted(consolidated.select("key", "value").collect()) == sorted(
+        entity.select("key", "value").collect()
+    )
+    # entity rows keep their own topic and the kafka record shape
+    row = records.filter("topic = 'orders-events'").limit(1).collect()[0]
     assert set(row.asDict()) == {"key", "value", "topic"}
     assert row["topic"] == "orders-events"
     assert '"tenant_id":"default"' in row["value"]

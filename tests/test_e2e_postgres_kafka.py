@@ -22,8 +22,8 @@ What it proves when it runs (CI with the rig):
 2. read: read_jdbc_predicates pulls it back merchant-partitioned
    (one WHERE fragment per custkey group — the reference's merchant
    isolation without N sequential queries);
-3. compile: compile_job builds the same consolidated event frame the
-   pipeline_backfill_job fixture pins against its DuckDB oracle;
+3. compile: compile_job builds the job's one record frame, the frame
+   the pipeline_backfill_job fixture pins against its DuckDB oracle;
 4. sink: write_kafka produces to a real broker; reading the topic back
    yields exactly the (key, value) multiset computed from the parquet
    fixture directly — row-level parity across the whole wire path.
@@ -179,15 +179,16 @@ def test_postgres_to_kafka_full_job_parity(spark):
             ),
         )
     )
-    frames = compile_job({"orders": from_pg}, spec)
-    expected_frames = compile_job({"orders": orders}, spec)
+    records = compile_job({"orders": from_pg}, spec)["*"]
+    expected_records = compile_job({"orders": orders}, spec)["*"]
     expected = {
-        (r["key"], r["value"]) for r in expected_frames[topic].collect()
+        (r["key"], r["value"])
+        for r in expected_records.filter(F.col("topic") == topic).collect()
     }
     assert expected
 
     # 4. produce to the real broker, read the topic back, assert parity
-    write_kafka(frames[topic], KafkaSinkConfig(bootstrap_servers=BOOTSTRAP))
+    write_kafka(records, KafkaSinkConfig(bootstrap_servers=BOOTSTRAP))
     back = (
         spark.read.format("kafka")
         .option("kafka.bootstrap.servers", BOOTSTRAP)

@@ -40,6 +40,50 @@ class TestPagerankExchangeReuse:
         api.pagerank(edges, undirected=True).collect()
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
+    @pytest.mark.parametrize("start", ["true", "false", None])
+    def test_aqe_conf_restored_after_overlapping_calls(self, spark, start):
+        """Two threads calling the kernel at once leave the session's AQE
+        conf as it started — set to its value, or unset."""
+        import threading
+
+        from hyperswitch_data_backfill_spark import api
+
+        key = "spark.sql.adaptive.enabled"
+        original = spark.conf.get(key, None)
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (3, 4)], "src bigint, dst bigint"
+        )
+        expected = sorted(api.pagerank(edges, undirected=True).collect())
+        try:
+            if start is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, start)
+            gate = threading.Barrier(2)
+            results, errors = [], []
+
+            def call():
+                try:
+                    gate.wait(timeout=60)
+                    results.append(
+                        sorted(api.pagerank(edges, undirected=True).collect()))
+                except Exception as exc:  # surfaced by the assert below
+                    errors.append(exc)
+
+            threads = [threading.Thread(target=call) for _ in range(2)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+            assert not errors, errors
+            assert results == [expected, expected]
+            assert spark.conf.get(key, None) == start
+        finally:
+            if original is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, original)
+
 
 class TestLshSingleBandingEvaluation:
     def test_census_window_matches_groupby_census(self, spark):

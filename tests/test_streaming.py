@@ -399,8 +399,9 @@ def test_sessionize_timeout_preserves_session_numbering(spark):
 
 
 def test_compile_job_on_streams_equals_batch(spark):
-    """The WHOLE job (two entities + consolidated unionByName) compiles onto
-    streaming sources unchanged — the continuous-backfill variant of
+    """The WHOLE job (two entities unioned, each row exploded onto its
+    entity and the consolidated topic) compiles onto streaming sources
+    unchanged — the continuous-backfill variant of
     main.rs:190-313 — and a bounded replay of the consolidated feed equals
     the batch compile_job's consolidated frame."""
     from hyperswitch_data_backfill_spark.plans.spec import _JOB, compile_job
@@ -411,9 +412,9 @@ def test_compile_job_on_streams_equals_batch(spark):
     }
     expected = sorted(
         (r["key"], r["value"], r["topic"])
-        for r in compile_job(batch_tables, _JOB, consolidated_topic="consolidated-events")[
-            "consolidated-events"
-        ].collect()
+        for r in compile_job(batch_tables, _JOB, consolidated_topic="consolidated-events")["*"]
+        .filter("topic = 'consolidated-events'")
+        .collect()
     )
     assert expected
 
@@ -430,7 +431,7 @@ def test_compile_job_on_streams_equals_batch(spark):
             for t, d in dirs.items()
         }
         frames = compile_job(stream_tables, _JOB, consolidated_topic="consolidated-events")
-        out = frames["consolidated-events"]
+        out = frames["*"].filter("topic = 'consolidated-events'")
         assert out.isStreaming
         q = write_memory_sink(out, "job_stream_test", complete=False)
         q.awaitTermination(240)
