@@ -118,7 +118,8 @@ def observe_topics(records, topics: list[str]) -> dict[str, tuple[int, str | Non
 
 def main(argv: list[str] | None = None, spark=None) -> int:
     """Run the backfill job. ``spark``: inject an existing session (tests);
-    when None a session is created and stopped here."""
+    when None the active session is used, or one is created and stopped
+    here."""
     args = build_parser().parse_args(argv)
     if args.master_key_env:
         import os
@@ -156,10 +157,14 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     job = BackfillSpec(entities=entities, start=args.start_date, end=args.end_date,
                        merchant_ids=merchant_ids, tenant_id=args.tenant_id)
 
-    owns_session = spark is None
-    if owns_session:
+    owns_session = False
+    if spark is None:
+        from pyspark.sql import SparkSession
+
         from hyperswitch_data_backfill_spark.session import get_spark
 
+        # get_spark is getOrCreate: stop the session only if it is new
+        owns_session = SparkSession.getActiveSession() is None
         spark = get_spark(app_name="backfill-job")
     try:
         if args.parquet_dir:

@@ -9,12 +9,20 @@ user of the reference tool (a fixed 4-pipeline ETL binary,
 reference main.rs:190-313) gets the same operations parameterized the
 way `pandas.merge_asof` / `MERGE INTO` / `ANALYZE` users expect.
 
-Every kernel here is the SAME plan shape as its oracle-verified
-fixture twin, and tests/test_api.py pins that two ways:
+The as-of, per-group, upsert, SCD-2, snapshot-diff, sessionize,
+histogram, stable-split, BM25 and PageRank kernels are the ONLY
+implementation of their capability: the registered keys that pin them
+(join_asof, compact_latest, scd2_apply, text_bm25, graph_pagerank …)
+are thin adapters that load the fixture tables, call the kernel and
+rename its output to the oracle's columns — so each kernel is checked
+against its DuckDB oracle through its key. The other kernels (near-
+dup, ANN, incremental dedup, clean-corpus, apply-changes) still sit
+beside registered ops with bodies of their own, or wrap their helpers.
+tests/test_api.py pins the kernels two ways:
 
-- equivalence: re-expressing the registered fixture op through the
-  generic kernel reproduces the driver-hashed result row-for-row
-  (so the generic path inherits the DuckDB-oracle evidence); and
+- equivalence: the kernel call each adapter makes (or, for a kernel
+  with a twin, re-expressing the twin through the kernel) reproduces
+  the registered key's result row-for-row; and
 - hypothesis laws: algebraic contracts (as-of match is the nearest
   earlier build row; SCD-2 apply(delta) ≡ rebuild(full); upsert
   idempotence; session gap bounds; diff-then-apply reconstructs the
@@ -70,9 +78,9 @@ def _names(cols: str | Iterable[str]) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# as-of join (operators/joins.py join_asof / join_asof_forward /
-# join_asof_tolerance generalized; reference replays event-time state the
-# same way when rebuilding payment timelines)
+# as-of join (runs the join_asof / join_asof_forward / join_asof_tolerance
+# keys; reference replays event-time state the same way when rebuilding
+# payment timelines)
 # ---------------------------------------------------------------------------
 
 def asof_join(
@@ -100,8 +108,8 @@ def asof_join(
     quadratic in hot keys; this never is.
 
     - ``allow_exact_matches=False`` (default): strict inequality — a
-      same-instant right row is NOT visible (the fixture ops' contract:
-      joins.py join_asof "at equal ts the probe sorts FIRST").
+      same-instant right row is NOT visible (the join_asof keys'
+      contract: at equal ts the probe sorts FIRST).
     - ``tolerance_us``: match is nulled out when the |time gap| in
       MICROSECONDS exceeds it (``on`` must be castable to timestamp).
     - ``tiebreak``: optional column present in BOTH frames that makes
@@ -209,8 +217,8 @@ def asof_join(
 
 
 # ---------------------------------------------------------------------------
-# per-group selection (operators/compaction.py compact_latest,
-# operators/ordering.py topk_per_group, operators/dedup.py exact tier)
+# per-group selection (runs the compact_latest and topk_per_group keys;
+# operators/dedup.py exact tier)
 # ---------------------------------------------------------------------------
 
 def first_row_per_group(
@@ -239,16 +247,18 @@ def topk_per_group(
     *,
     rank_col: str | None = None,
 ) -> DataFrame:
-    """Top-k rows per key under the ordering (ordering.py:152 made
-    generic). row_number (not rank) so the k bound is exact; pass
+    """Top-k rows per key under the ordering (the topk_per_group
+    key's kernel). row_number (not rank) so the k bound is exact; pass
     ``rank_col`` to keep the 1..k position in the output."""
     w = Window.partitionBy(*_names(key_cols)).orderBy(*order_cols)
-    out = df.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= k)
-    return out.withColumnRenamed("__rk", rank_col) if rank_col else out.drop("__rk")
+    rk = rank_col or "__rk"
+    out = df.withColumn(rk, F.row_number().over(w)).filter(F.col(rk) <= k)
+    return out if rank_col else out.drop(rk)
 
 
 # ---------------------------------------------------------------------------
-# upsert / SCD-2 / diff (operators/compaction.py generalized)
+# upsert / SCD-2 / diff (runs the merge_upsert, scd2_intervals, scd2_apply
+# and cdc_snapshot_diff keys)
 # ---------------------------------------------------------------------------
 
 def merge_upsert(
@@ -257,9 +267,11 @@ def merge_upsert(
     """MERGE WHEN MATCHED THEN UPDATE, ELSE INSERT, without a table
     format: delta ∪ (base ⟕anti delta-keys). Columns must align
     (unionByName). Both legs shuffle on the same key; a small delta's
-    key set broadcasts into the anti join."""
+    key set broadcasts into the anti join. The keys are not
+    de-duplicated first: an anti join's result does not depend on
+    repeated keys on its right side."""
     keys = _names(key_cols)
-    survivors = base.join(delta.select(*keys).distinct(), keys, "left_anti")
+    survivors = base.join(delta.select(*keys), keys, "left_anti")
     return delta.unionByName(survivors)
 
 
@@ -275,8 +287,8 @@ def scd2_build(
     """SCD-2 history from a version log: every row becomes a validity
     interval closed by the key's next version (open current → NULL).
     Preserves every input column; adds ``valid_from`` (= ts_col) and
-    ``valid_to`` (= lead). One keyed window (compaction.py:130 made
-    generic)."""
+    ``valid_to`` (= lead). One keyed window (the scd2_intervals key's
+    kernel)."""
     w = Window.partitionBy(*_names(key_cols)).orderBy(ts_col, *tiebreak_cols)
     return df.select(
         "*",
@@ -300,8 +312,8 @@ def scd2_apply(
     anti join unchanged. Contract (hypothesis-pinned in test_api.py):
     ``scd2_apply(scd2_build(base), delta) ≡ scd2_build(base ∪ delta)``.
     Cost is O(affected keys), not O(history) — the delta key set is
-    distinct-ed and broadcast for both probes (compaction.py:167 made
-    generic)."""
+    distinct-ed and broadcast for both probes (the scd2_apply key's
+    kernel)."""
     keys = _names(key_cols)
     delta_keys = delta.select(*keys).distinct()
     touched = snapshot.join(F.broadcast(delta_keys), keys, "left_semi")
@@ -321,8 +333,8 @@ def snapshot_diff(
     compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Derive a CDC changelog (op + before/after images) from two full
-    snapshots with no change-tracking metadata (compaction.py:239 made
-    generic). One full-outer keyed join; unchanged rows are dropped
+    snapshots with no change-tracking metadata (the cdc_snapshot_diff
+    key's kernel). One full-outer keyed join; unchanged rows are dropped
     before any downstream work. Output: key cols, ``op`` in
     insert|update|delete, ``old_<c>``/``new_<c>`` images."""
     keys = _names(key_cols)
@@ -458,8 +470,8 @@ def apply_changes(
 
 
 # ---------------------------------------------------------------------------
-# sessionization / statistics (operators/windows.py win_session,
-# operators/aggregates.py agg_equidepth_histogram generalized)
+# sessionization / statistics (runs the win_session and
+# agg_equidepth_histogram keys)
 # ---------------------------------------------------------------------------
 
 def sessionize(
@@ -473,7 +485,7 @@ def sessionize(
 ) -> DataFrame:
     """Assign 1-based session ids per key: a new session starts when the
     gap to the previous event exceeds ``gap_us`` microseconds
-    (windows.py:135 made generic; the batch twin of the streaming
+    (the win_session key's kernel; the batch twin of the streaming
     sessionizer). One keyed window; rows pass through unchanged plus
     the session id column."""
     w = Window.partitionBy(*_names(key_cols)).orderBy(ts_col, *tiebreak_cols)
@@ -930,8 +942,8 @@ def stable_split(
 ) -> DataFrame:
     """Deterministic, shuffle-free dataset splits (train/eval/test …)
     by hashing the row id into ``buckets`` and slicing the bucket range
-    by the given weights, in dict order (aggregates.py
-    sample_stable_split made generic).
+    by the given weights, in dict order (the sample_stable_split key's
+    kernel).
 
     The split is a pure function of (id, salt): re-running, adding, or
     removing OTHER rows never moves a row between splits — the property
@@ -1000,10 +1012,10 @@ def histogram_equidepth(
 ) -> DataFrame:
     """Equi-depth histogram: NTILE over a total ordering, so bucket row
     counts differ by at most one and bounds are deterministic given the
-    tiebreak (aggregates.py:685 made generic). Output: bucket, n, lo,
-    hi. The fixture path is the exact single-ordering NTILE; the 100 TB
-    path is the mergeable approx-percentile twin, as documented on the
-    fixture op."""
+    tiebreak (the agg_equidepth_histogram key's kernel). Output:
+    bucket, n, lo, hi. This is the exact single-ordering NTILE; the
+    100 TB path is the mergeable approx-percentile twin, as documented
+    on the registered key."""
     w = Window.orderBy(col, *tiebreak_cols)
     return (
         df.select(F.col(col), F.ntile(buckets).over(w).alias("bucket"))
@@ -1017,9 +1029,8 @@ def histogram_equidepth(
 
 
 # ---------------------------------------------------------------------------
-# graph / retrieval / image kernels (operators/graph.py graph_pagerank,
-# operators/text.py text_bm25, operators/perceptual.py neardup_images
-# made generic — r12 verdict items 4/6)
+# graph / retrieval / image kernels (run the graph_pagerank and text_bm25
+# keys; operators/perceptual.py neardup_images made generic)
 # ---------------------------------------------------------------------------
 
 # pagerank flips the session-global AQE conf for its checkpoint job;
@@ -1039,7 +1050,7 @@ def pagerank(
     undirected: bool = False,
 ) -> DataFrame:
     """Fixed-point PageRank over a caller edge list → (node, pr)
-    (graph.py:92 made generic; same determinism contract: integer
+    (the graph_pagerank key's kernel; determinism contract: integer
     micro-unit ranks, ``floor(pr / deg)`` contributions, damping as an
     integer percent — bit-reproducible across engines and runs).
 
@@ -1135,11 +1146,11 @@ def bm25(
     top_k: int | None = 50,
 ) -> DataFrame:
     """Okapi BM25 ranked retrieval over a caller corpus → (id_col,
-    score, rk) for one query-term set (text.py text_bm25 made generic;
+    score, rk) for one query-term set (the text_bm25 key's kernel;
     Robertson/Sparck-Jones scoring, ROUND(·,6) for cross-engine float
     stability). ``top_k=None`` returns every matching doc scored.
 
-    Same plan shape as the oracle-verified fixture: the per-(doc,term)
+    Plan: the per-(doc,term)
     tf groupBy is the only corpus-sized shuffle (tf is checkpointed —
     it feeds dl, df, and the score join); corpus stats are a 1-row
     broadcast; query-term df is a query-sized broadcast; the final
@@ -1177,7 +1188,7 @@ def bm25(
         tf.join(F.broadcast(df), "token")
         .join(dl, "_id")
         .crossJoin(F.broadcast(stats))  # 1-row corpus stats
-        .groupBy("_id")
+        .groupBy(F.col("_id").alias(id_col))
         .agg(
             F.round(
                 F.sum(
@@ -1195,11 +1206,11 @@ def bm25(
             ).alias("score")
         )
     )
-    w = Window.orderBy(F.col("score").desc(), "_id")
+    w = Window.orderBy(F.col("score").desc(), id_col)
     ranked = scored.withColumn("rk", F.row_number().over(w))
     if top_k is not None:
         ranked = ranked.filter(F.col("rk") <= top_k)
-    return ranked.select(F.col("_id").alias(id_col), "score", "rk")
+    return ranked
 
 
 def neardup_images(

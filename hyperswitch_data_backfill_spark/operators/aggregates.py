@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hyperswitch_data_backfill_spark import api
 from hyperswitch_data_backfill_spark.catalog import load_table
 from hyperswitch_data_backfill_spark.registry import register
 
@@ -232,13 +233,8 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_stable_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    ) % 100
-    return docs.select(
-        "doc_id",
-        "lang",
-        F.when(bucket < 90, F.lit("train")).otherwise(F.lit("eval")).alias("split"),
+    return api.stable_split(docs, "doc_id", {"train": 0.9, "eval": 0.1}).select(
+        "doc_id", "lang", "split"
     )
 
 
@@ -683,19 +679,13 @@ EQUIDEPTH_BUCKETS = 16
         "for exact vs approx percentiles.",
 )
 def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.orderBy("o_totalprice", "o_orderkey")
-    ranked = orders.select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        F.ntile(EQUIDEPTH_BUCKETS).over(w).alias("bucket"),
+        "o_orderkey",
     )
-    return ranked.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.min("cents").alias("lo_cents"),
-        F.max("cents").alias("hi_cents"),
-    )
+    return api.histogram_equidepth(
+        orders, "cents", EQUIDEPTH_BUCKETS, ["o_orderkey"]
+    ).withColumnsRenamed({"lo": "lo_cents", "hi": "hi_cents"})
 
 
 HLL_MERGE_BUCKETS = 8

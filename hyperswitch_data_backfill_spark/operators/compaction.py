@@ -33,13 +33,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from hyperswitch_data_backfill_spark import api
 from hyperswitch_data_backfill_spark.catalog import load_table
 from hyperswitch_data_backfill_spark.registry import register
 
 _MERGE_CUTOFF = "1997-06-01"
 _MERGE_COLS = ("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+_SCD2_COLS = {"from_col": "valid_from_us", "to_col": "valid_to_us"}
+_SCD2_OUT = ("user_id", "event_id", "event_type", "valid_from_us", "valid_to_us")
+
+
+def _versioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events version log keyed by user, versioned at micros (us)."""
+    return load_table(spark, sf_dir, "events").select(
+        "user_id", "event_id", "event_type",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+    )
 
 
 @register(
@@ -65,14 +75,9 @@ def compact_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
     )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts_us").desc(), F.col("event_id").desc()
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "ts_us", "event_type", "value")
-    )
+    return api.first_row_per_group(
+        ev, "user_id", [F.col("ts_us").desc(), F.col("event_id").desc()]
+    ).select("user_id", "event_id", "ts_us", "event_type", "value")
 
 
 @register(
@@ -98,18 +103,13 @@ def compact_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    base = (
-        orders.filter(F.col("o_orderstatus") == "F")
-        .select(*_MERGE_COLS)
-        .withColumn("src", F.lit("base"))
+    base = orders.filter(F.col("o_orderstatus") == "F").select(
+        *_MERGE_COLS, F.lit("base").alias("src")
     )
-    delta = (
-        orders.filter(F.col("o_orderdate") >= F.lit(_MERGE_CUTOFF).cast("timestamp"))
-        .select(*_MERGE_COLS)
-        .withColumn("src", F.lit("delta"))
-    )
-    survivors = base.join(delta.select("o_orderkey"), "o_orderkey", "left_anti")
-    return delta.unionByName(survivors)
+    delta = orders.filter(
+        F.col("o_orderdate") >= F.lit(_MERGE_CUTOFF).cast("timestamp")
+    ).select(*_MERGE_COLS, F.lit("delta").alias("src"))
+    return api.merge_upsert(base, delta, "o_orderkey")
 
 
 @register(
@@ -128,17 +128,9 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(operators/joins.py join_asof consumes exactly this shape).",
 )
 def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    return ev.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.col("us").alias("valid_from_us"),
-        F.lead("us").over(w).alias("valid_to_us"),
-    )
+    return api.scd2_build(
+        _versioned_events(spark, sf_dir), "user_id", "us", ["event_id"], **_SCD2_COLS
+    ).select(*_SCD2_OUT)
 
 
 @register(
@@ -165,39 +157,17 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "affected slice.",
 )
 def scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    versioned = ev.select("user_id", "event_id", "event_type", "us")
-    base_rows = versioned.filter(F.col("event_id") % 2 == 0)
+    versioned = _versioned_events(spark, sf_dir)
     delta = versioned.filter(F.col("event_id") % 2 == 1)
-
     # the pre-existing SCD2 snapshot (what a real caller would read back
-    # from the lake): intervals built over the base half
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    snapshot = base_rows.select(
-        "user_id", "event_id", "event_type",
-        F.col("us").alias("valid_from_us"),
-        F.lead("us").over(w).alias("valid_to_us"),
+    # from the lake): intervals built over the even half
+    snapshot = api.scd2_build(
+        versioned.filter(F.col("event_id") % 2 == 0),
+        "user_id", "us", ["event_id"], **_SCD2_COLS,
     )
-
-    # apply: touch ONLY keys present in the delta
-    delta_keys = delta.select("user_id").distinct()
-    touched = snapshot.join(F.broadcast(delta_keys), "user_id", "left_semi")
-    untouched = snapshot.join(F.broadcast(delta_keys), "user_id", "left_anti")
-    rebuilt = (
-        touched.select(
-            "user_id", "event_id", "event_type",
-            F.col("valid_from_us").alias("us"),
-        )
-        .unionByName(delta)
-        .select(
-            "user_id", "event_id", "event_type",
-            F.col("us").alias("valid_from_us"),
-            F.lead("us").over(w.orderBy("us", "event_id")).alias("valid_to_us"),
-        )
-    )
-    return untouched.unionByName(rebuilt)
+    return api.scd2_apply(
+        snapshot, delta, "user_id", "us", ["event_id"], **_SCD2_COLS
+    ).select(*_SCD2_OUT)
 
 
 @register(
@@ -248,24 +218,11 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("o_totalprice"))
         .alias("o_totalprice"),
     )
-    o, n = old.alias("o"), new.alias("n")
-    joined = o.join(n, F.col("o.o_orderkey") == F.col("n.o_orderkey"), "full_outer")
-    changed = (
-        F.col("o.o_orderkey").isNull()
-        | F.col("n.o_orderkey").isNull()
-        | ~F.col("o.o_orderstatus").eqNullSafe(F.col("n.o_orderstatus"))
-        | ~F.col("o.o_totalprice").eqNullSafe(F.col("n.o_totalprice"))
-    )
-    op = (
-        F.when(F.col("o.o_orderkey").isNull(), "insert")
-        .when(F.col("n.o_orderkey").isNull(), "delete")
-        .otherwise("update")
-    )
-    return joined.filter(changed).select(
-        F.coalesce(F.col("n.o_orderkey"), F.col("o.o_orderkey")).alias("o_orderkey"),
-        op.alias("op"),
-        F.col("n.o_orderstatus").alias("new_status"),
-        F.col("n.o_totalprice").alias("new_price"),
-        F.col("o.o_orderstatus").alias("old_status"),
-        F.col("o.o_totalprice").alias("old_price"),
+    return api.snapshot_diff(old, new, "o_orderkey").select(
+        "o_orderkey",
+        "op",
+        F.col("new_o_orderstatus").alias("new_status"),
+        F.col("new_o_totalprice").alias("new_price"),
+        F.col("old_o_orderstatus").alias("old_status"),
+        F.col("old_o_totalprice").alias("old_price"),
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hyperswitch_data_backfill_spark import api
 from hyperswitch_data_backfill_spark.catalog import load_table
 from hyperswitch_data_backfill_spark.registry import register
 
@@ -127,6 +128,20 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name")
 
 
+def _asof_purchases(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
+    """Every event as-of joined to the same user's purchases by
+    ``api.asof_join`` (strict, event_id tiebreak; ``kw`` passes
+    direction/tolerance): event_id, user_id, ts, ts_asof, p_val_asof."""
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts", F.col("value").alias("p_val")
+    )
+    return api.asof_join(
+        ev.select("event_id", "user_id", "ts"), purchases, on="ts",
+        by="user_id", value_cols=["p_val"], tiebreak="event_id", **kw,
+    )
+
+
 @register(
     "join_asof",
     oracle="""
@@ -149,27 +164,9 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         "deterministic oracle.)",
 )
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    # tag 0 = probe rows, tag 1 = purchase (build) rows; at equal ts the
-    # probe sorts FIRST so a same-instant purchase is not visible (strict <)
-    probe = ev.select("event_id", "user_id", "ts", F.lit(None).cast("double").alias("p_val"), F.lit(0).alias("tag"))
-    build = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts", F.col("value").alias("p_val"), F.lit(1).alias("tag"))
+    return _asof_purchases(spark, sf_dir).withColumnsRenamed(
+        {"ts_asof": "p_ts", "p_val_asof": "p_value"}
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "tag", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = probe.unionByName(build).select(
-        "event_id", "user_id", "ts", "tag",
-        F.last(F.when(F.col("tag") == 1, F.col("ts")), ignorenulls=True).over(w).alias("p_ts"),
-        F.last(F.when(F.col("tag") == 1, F.col("p_val")), ignorenulls=True).over(w).alias("p_value"),
-    )
-    return carried.filter(F.col("tag") == 0).select("event_id", "user_id", "ts", "p_ts", "p_value")
 
 
 @register(
@@ -344,31 +341,8 @@ def join_skew_split(
         "per user, so native ASOF is a deterministic oracle.)",
 )
 def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    # tag 0 = probe, tag 1 = purchase; DESCENDING ts, and at equal ts the
-    # probe sorts first so a same-instant purchase is not visible (strict >)
-    probe = ev.select(
-        "event_id", "user_id", "ts",
-        F.lit(None).cast("double").alias("n_val"), F.lit(0).alias("tag"),
-    )
-    build = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts", F.col("value").alias("n_val"), F.lit(1).alias("tag"))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").desc(), "tag", F.col("event_id").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = probe.unionByName(build).select(
-        "event_id", "user_id", "ts", "tag",
-        F.last(F.when(F.col("tag") == 1, F.col("ts")), ignorenulls=True).over(w).alias("n_ts"),
-        F.last(F.when(F.col("tag") == 1, F.col("n_val")), ignorenulls=True).over(w).alias("n_value"),
-    )
-    return carried.filter(F.col("tag") == 0).select(
-        "event_id", "user_id", "ts", "n_ts", "n_value"
+    return _asof_purchases(spark, sf_dir, direction="forward").withColumnsRenamed(
+        {"ts_asof": "n_ts", "p_val_asof": "n_value"}
     )
 
 
@@ -459,40 +433,9 @@ ASOF_TOLERANCE_US = 7 * 24 * 3600 * 1_000_000  # 7 days
         "100 TB.",
 )
 def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    probe = ev.select(
-        "event_id", "user_id", "ts",
-        F.lit(None).cast("double").alias("p_val"), F.lit(0).alias("tag"),
-    )
-    build = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts", F.col("value").alias("p_val"), F.lit(1).alias("tag"))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "tag", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = probe.unionByName(build).select(
-        "event_id", "user_id", "ts", "tag",
-        F.last(F.when(F.col("tag") == 1, F.col("ts")), ignorenulls=True).over(w).alias("p_ts"),
-        F.last(F.when(F.col("tag") == 1, F.col("p_val")), ignorenulls=True).over(w).alias("p_value"),
-    )
-    fresh = (
-        F.col("p_ts").isNotNull()
-        & (
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            - F.unix_micros(F.col("p_ts").cast("timestamp"))
-            <= ASOF_TOLERANCE_US
-        )
-    )
-    return carried.filter(F.col("tag") == 0).select(
-        "event_id", "user_id", "ts",
-        F.when(fresh, F.col("p_ts")).alias("p_ts"),
-        F.when(fresh, F.col("p_value")).alias("p_value"),
-    )
+    return _asof_purchases(
+        spark, sf_dir, tolerance_us=ASOF_TOLERANCE_US
+    ).withColumnsRenamed({"ts_asof": "p_ts", "p_val_asof": "p_value"})
 
 
 @register(

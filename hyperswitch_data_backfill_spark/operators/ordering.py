@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hyperswitch_data_backfill_spark import api
 from hyperswitch_data_backfill_spark.catalog import load_table
 from hyperswitch_data_backfill_spark.registry import register
 
@@ -150,13 +151,10 @@ def paginate_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "determinism. At scale, group-local sort spills, never the driver.",
 )
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderkey", "o_totalprice"
     )
-    return (
-        load_table(spark, sf_dir, "orders")
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
+    return api.topk_per_group(
+        orders, "o_custkey",
+        [F.col("o_totalprice").desc(), F.col("o_orderkey")], 3, rank_col="rk",
     )

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hyperswitch_data_backfill_spark import api
 from hyperswitch_data_backfill_spark.catalog import load_table, spread_fanout
 from hyperswitch_data_backfill_spark.registry import register
 
@@ -638,56 +639,8 @@ BM25_TOP_K = 50
         "query-term document frequency, not corpus size.",
 )
 def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = spread_docs(docs).select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
-    # tf feeds three branches (dl, df, scored) — checkpoint so Catalyst
-    # doesn't re-derive the corpus scan per consumer (the
-    # text_unigram_logprob lesson; production lands tf as a stage table)
-    tf = (
-        tok.groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
-    )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    df = (
-        tf.filter(F.col("token").isin(*BM25_QUERY_TERMS))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    scored = (
-        tf.join(F.broadcast(df), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.log(
-                        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                        + 1.0
-                    )
-                    * (F.col("tf") * (BM25_K1 + 1.0))
-                    / (
-                        F.col("tf")
-                        + BM25_K1
-                        * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-                    )
-                ),
-                6,
-            ).alias("score")
-        )
-    )
-    w = Window.orderBy(F.col("score").desc(), "doc_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= BM25_TOP_K)
-        .select("doc_id", "score", "rk")
-    )
+    return api.bm25(docs, BM25_QUERY_TERMS, k1=BM25_K1, b=BM25_B, top_k=BM25_TOP_K)
 
 
 INVIDX_MIN_DF = 2

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hyperswitch_data_backfill_spark import api
 from hyperswitch_data_backfill_spark.catalog import load_table
 from hyperswitch_data_backfill_spark.registry import register
 
@@ -134,17 +135,9 @@ SESSION_GAP_MIN = 240  # shared with streaming/pipeline.py sessionize_stream
 )
 def win_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = SESSION_GAP_MIN * 60 * 1_000_000
-    # ntz→ltz cast is identity under the engine's pinned UTC session tz;
-    # micros precision matches the oracle's INTERVAL comparison exactly.
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    prev_us = F.lag(us).over(w)
-    is_new = F.when(prev_us.isNull() | ((us - prev_us) > gap_us), 1).otherwise(0)
     return (
-        ev.withColumn(
-            "session_id",
-            F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        api.sessionize(
+            ev, "user_id", "ts", SESSION_GAP_MIN * 60 * 1_000_000, ["event_id"]
         )
         .groupBy("user_id", "session_id")
         .agg(

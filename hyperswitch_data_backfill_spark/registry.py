@@ -123,7 +123,24 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # rows of compile_job's single exploded record frame, and
 # graph_pagerank runs api.pagerank, whose AQE toggle is now
 # lock-guarded and restores an unset conf by unsetting it.
+# One-implementation pass: these thirteen keys are now adapters over
+# their api.py kernels (as-of join, first-row/top-k per group, upsert,
+# SCD-2 build/apply, snapshot diff, sessionize, equi-depth histogram,
+# stable split, BM25); their hand-written bodies are gone.
 _WINDOW_PREPEND: tuple[str, ...] = (
+    "join_asof",
+    "join_asof_forward",
+    "join_asof_tolerance",
+    "compact_latest",
+    "merge_upsert",
+    "scd2_intervals",
+    "scd2_apply",
+    "cdc_snapshot_diff",
+    "topk_per_group",
+    "win_session",
+    "agg_equidepth_histogram",
+    "sample_stable_split",
+    "text_bm25",
     "pipeline_backfill_job",
     "graph_pagerank",
     "pgwire_scan_orders",
@@ -167,10 +184,23 @@ def _shipped_evidence_rounds() -> list[int]:
 # matches neither and fails.
 _WINDOW_EVIDENCE_ROUND: int = max(_shipped_evidence_rounds(), default=0)
 
-# ONE-FRAME WINDOW = rotation output at evidence pin r17 with the
-# fifteen changed-implementation prepends above, then the r13 and r14
-# cohorts oldest-evidence-first.
+# ONE-IMPLEMENTATION WINDOW = rotation output at evidence pin r17 with
+# the twenty-eight changed-implementation prepends above, then the r13
+# and r14 cohorts oldest-evidence-first.
 _DRIVER_WINDOW: list[str] = [
+    "join_asof",  # green r16
+    "join_asof_forward",  # green r17
+    "join_asof_tolerance",  # green r17
+    "compact_latest",  # green r17
+    "merge_upsert",  # green r14
+    "scd2_intervals",  # green r15
+    "scd2_apply",  # green r13
+    "cdc_snapshot_diff",  # green r15
+    "topk_per_group",  # green r14
+    "win_session",  # green r17
+    "agg_equidepth_histogram",  # green r15
+    "sample_stable_split",  # green r13
+    "text_bm25",  # green r15
     "pipeline_backfill_job",  # green r14
     "graph_pagerank",  # green r17
     "pgwire_scan_orders",  # green r15
@@ -189,8 +219,6 @@ _DRIVER_WINDOW: list[str] = [
     "paginate_window",  # green r13
     "project_subset",  # green r13
     "remap_columns",  # green r13
-    "sample_stable_split",  # green r13
-    "scd2_apply",  # green r13
     "seq_pattern_funnel",  # green r13
     "seq_pattern_funnel_sessioned",  # green r13
     "sim_topk_recall_floor",  # green r13
@@ -210,17 +238,6 @@ _DRIVER_WINDOW: list[str] = [
     "json_serialize",  # green r14
     "kafka_payload_shape",  # green r14
     "map_props_stats",  # green r14
-    "math_money",  # green r14
-    "merge_upsert",  # green r14
-    "multimodal_audio_rms",  # green r14
-    "multimodal_frame_sample",  # green r14
-    "multimodal_resize_mean",  # green r14
-    "pack_sequences",  # green r14
-    "pipeline_clean_corpus",  # green r14
-    "sample_stratified_fixed",  # green r14
-    "scalar_subquery_avg",  # green r14
-    "scan_customer_page",  # green r14
-    "scan_orders",  # green r14
 ]
 
 

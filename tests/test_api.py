@@ -2,10 +2,13 @@
 
 Two layers, per the module's docstring:
 
-1. EQUIVALENCE — re-expressing each registered fixture op through the
-   generic kernel reproduces the driver-hashed/oracle-verified result
-   row-for-row on the fixture tables, so the generic path inherits the
-   DuckDB-oracle evidence without registering duplicate keys.
+1. EQUIVALENCE — the kernel call reproduces the registered key's
+   driver-hashed/oracle-verified result row-for-row on the fixture
+   tables. Where the key is an adapter over the kernel (the as-of,
+   compaction, SCD-2, diff, top-k, session, histogram, split, BM25 and
+   PageRank keys), the test pins the adapter's arguments and column
+   renames; where the key keeps a body of its own, it pins the two
+   implementations equal.
 2. LAWS — hypothesis properties on adversarial generated inputs
    (duplicate timestamps, empty sides, single keys): the algebraic
    contracts each kernel's docstring promises.

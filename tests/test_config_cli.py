@@ -194,6 +194,23 @@ def test_cli_dry_run_on_fixtures(config_path, capsys, spark):
     assert "entity_id" in by_topic["orders-events"][2]
 
 
+def test_cli_leaves_an_active_session_running(config_path, capsys, spark):
+    """Without ``spark=``, main() reuses the process's active session
+    (get_spark is getOrCreate) and must not stop it on the way out."""
+    import hyperswitch_data_backfill_spark.__main__ as cli
+
+    rc = cli.main([
+        "-f", config_path,
+        "-s", "1996-01-01",
+        "-e", "1996-01-31",
+        "--parquet-dir", SF_DIR,
+        "--dry-run",
+    ])
+    assert rc == 0
+    capsys.readouterr()
+    assert spark.range(3).count() == 3
+
+
 def test_cli_jdbc_path_without_merchants_uses_bounded_read(
     tmp_path, capsys, spark, monkeypatch
 ):

@@ -7,7 +7,8 @@ hand-built events.parquet into a tmp dir and drive the REGISTERED
 functions on it (the fns take sf_dir, so the exact production code path
 runs — no reimplementation), pinning each documented boundary rule:
 
-- join_asof: strictly-earlier — a same-instant purchase is NOT visible;
+- join_asof / join_asof_forward: strictly-earlier / strictly-later — a
+  same-instant purchase is NOT visible;
 - join_asof_tolerance: age == tolerance is a HIT (<=), +1 µs a miss;
 - win_session: gap == threshold stays the SAME session (> starts new);
 - attr_last_touch: lag == window is credited (<=), +1 µs is 'direct';
@@ -56,6 +57,21 @@ def test_asof_same_instant_purchase_is_invisible(spark, tmp_path):
     assert out[2]["p_ts"] == T0 and out[2]["p_value"] == 10.0
     # the purchase row itself (also a probe) must not see itself
     assert out[0]["p_ts"] is None
+
+    # forward (strict >): the fixture's purchase timestamps never tie
+    # within a user, so only crafted rows catch a flipped tie rule
+    rows = [
+        (T0, 1, "purchase", 10.0),          # id 0: build row at T0
+        (T0, 1, "view", 1.0),               # id 1: probe at the SAME instant
+        (T0 - US, 1, "view", 1.0),          # id 2: probe 1 µs earlier
+    ]
+    d = _events_dir(spark, tmp_path, rows)
+    out = {
+        r["event_id"]: r for r in REGISTRY["join_asof_forward"].fn(spark, d).collect()
+    }
+    assert out[1]["n_ts"] is None, "strict >: same-instant purchase must not match"
+    assert out[2]["n_ts"] == T0 and out[2]["n_value"] == 10.0
+    assert out[0]["n_ts"] is None
 
 
 def test_asof_tolerance_boundary_inclusive(spark, tmp_path):

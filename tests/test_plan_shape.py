@@ -216,6 +216,22 @@ def test_compaction_single_shuffle_each(spark):
     assert "WindowGroupLimit" in plan(spark, "compact_latest")
 
 
+def test_merge_upsert_anti_join_has_no_aggregate(spark):
+    """api.merge_upsert (the merge_upsert key's kernel): the anti join
+    probes the delta's keys as they are — de-duplicating them first
+    would only add HashAggregates under the join's build side."""
+    from hyperswitch_data_backfill_spark import api
+
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    delta = spark.createDataFrame([(2, "c"), (2, "d")], "k int, v string")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        api.merge_upsert(base, delta, "k").explain("formatted")
+    p = buf.getvalue()
+    assert "Anti" in p, p
+    assert "HashAggregate" not in p, p
+
+
 def test_quantize_has_no_shuffle_and_no_python(spark):
     """emb_quantize_int8 is per-row codegen: no Exchange, no Python worker."""
     p = plan(spark, "emb_quantize_int8")
