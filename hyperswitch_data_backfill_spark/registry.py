@@ -127,7 +127,15 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # their api.py kernels (as-of join, first-row/top-k per group, upsert,
 # SCD-2 build/apply, snapshot diff, sessionize, equi-depth histogram,
 # stable split, BM25); their hand-written bodies are gone.
+# One-pass record-batch pass: the magic-2 batch encoder and decoder
+# each run one loop over a batch's bytes (varint table, index
+# arithmetic), under every v3 produce and v4 fetch key; these four
+# ride them through the producer, the broker double and the consumer.
 _WINDOW_PREPEND: tuple[str, ...] = (
+    "kafka_wire_v2_roundtrip",
+    "kafka_wire_fetch_roundtrip",
+    "stream_kafka_wire_tumbling",
+    "stream_kafka_wire_tumbling_parallel",
     "join_asof",
     "join_asof_forward",
     "join_asof_tolerance",
@@ -148,13 +156,9 @@ _WINDOW_PREPEND: tuple[str, ...] = (
     "pgwire_scan_props",
     "pipeline_pg_to_kafka",
     "stream_pgwire_tail",
-    "kafka_wire_v2_roundtrip",
-    "kafka_wire_fetch_roundtrip",
     "stream_pgwire_cdc",
     "kafka_wire_roundtrip",
     "kafka_wire_routed_roundtrip",
-    "stream_kafka_wire_tumbling",
-    "stream_kafka_wire_tumbling_parallel",
     "stream_cdc_kafka_maintained",
 )
 
@@ -184,10 +188,14 @@ def _shipped_evidence_rounds() -> list[int]:
 # matches neither and fails.
 _WINDOW_EVIDENCE_ROUND: int = max(_shipped_evidence_rounds(), default=0)
 
-# ONE-IMPLEMENTATION WINDOW = rotation output at evidence pin r17 with
+# ONE-PASS RECORD-BATCH WINDOW = rotation output at evidence pin r17 with
 # the twenty-eight changed-implementation prepends above, then the r13
 # and r14 cohorts oldest-evidence-first.
 _DRIVER_WINDOW: list[str] = [
+    "kafka_wire_v2_roundtrip",  # green r15
+    "kafka_wire_fetch_roundtrip",  # green r15
+    "stream_kafka_wire_tumbling",  # green r15
+    "stream_kafka_wire_tumbling_parallel",  # green r14
     "join_asof",  # green r16
     "join_asof_forward",  # green r17
     "join_asof_tolerance",  # green r17
@@ -208,13 +216,9 @@ _DRIVER_WINDOW: list[str] = [
     "pgwire_scan_props",  # green r15
     "pipeline_pg_to_kafka",  # green r15
     "stream_pgwire_tail",  # green r17
-    "kafka_wire_v2_roundtrip",  # green r15
-    "kafka_wire_fetch_roundtrip",  # green r15
     "stream_pgwire_cdc",  # green r16
     "kafka_wire_roundtrip",  # green r17
     "kafka_wire_routed_roundtrip",  # green r17
-    "stream_kafka_wire_tumbling",  # green r15
-    "stream_kafka_wire_tumbling_parallel",  # green r14
     "stream_cdc_kafka_maintained",  # green r15
     "paginate_window",  # green r13
     "project_subset",  # green r13

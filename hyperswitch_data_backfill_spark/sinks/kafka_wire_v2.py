@@ -12,7 +12,8 @@ request/response; CRC-32C per RFC 3720 §B.4, pinned to its published
 test vector) with the same executed-proof discipline as the v0 leg:
 
 - codec round-trips + corruption detection + hypothesis property tests
-  (tests/test_kafka_wire_v2.py),
+  (tests/test_kafka_wire_v2.py; the one-pass batch encoder and decoder
+  against their per-record references in tests/test_kafka_wire_props.py),
 - ``encode_produce_request_v3_parts``, the codec the one producer
   (``kafka_wire.produce_rows``) looks up for ``wire_version=3``, and
   ``write_kafka_wire_v2``, which drives that producer per Spark task:
@@ -167,13 +168,25 @@ def encode_varint(n: int) -> bytes:
             return bytes(out)
 
 
-def decode_varint(r: "_Reader") -> int:
+# The varints of 0..8191, every non-negative value that encodes in one
+# or two bytes: record lengths, offset deltas and key/value lengths of
+# ordinary records fall inside it, and encode_varint covers the rest.
+_VARINTS = tuple(encode_varint(n) for n in range(8192))
+_N_VARINTS = len(_VARINTS)
+
+
+def _varint_at(buf: bytes, i: int, end: int) -> tuple[int, int]:
+    """(value, next index) of the zigzag varint at ``buf[i]``, which
+    must end before ``end``."""
     u = shift = 0
     while True:
-        b = r.take(1)[0]
+        if i >= end:
+            raise ValueError("truncated Kafka frame")
+        b = buf[i]
+        i += 1
         u |= (b & 0x7F) << shift
         if not b & 0x80:
-            return unzigzag(u)
+            return unzigzag(u), i
         shift += 7
         if shift > 70:
             raise ValueError("varint longer than 10 bytes")
@@ -188,7 +201,12 @@ def encode_record_v2(
     value: bytes | None,
     headers: list[tuple[str, bytes]] | None = None,
 ) -> bytes:
-    """One magic-2 Record, length-prefixed (varint)."""
+    """One magic-2 Record, length-prefixed (varint): attributes 0, then
+    the timestamp and offset deltas, key, value and headers, a null key,
+    value or header value written as length -1. This is the general
+    path: ``encode_record_batch_v2`` writes header-less, timestamp-delta-0
+    records in one pass of its own, pinned byte-for-byte to this
+    function by tests/test_kafka_wire_props.py."""
     if headers is None:
         headers = ()
     body = io.BytesIO()
@@ -213,6 +231,52 @@ def encode_record_v2(
             body.write(hv)
     payload = body.getvalue()
     return encode_varint(len(payload)) + payload
+
+
+def _varint_size(n: int) -> int:
+    return len(_VARINTS[n]) if 0 <= n < _N_VARINTS else len(encode_varint(n))
+
+
+def record_size_v2(
+    offset_delta: int, key: bytes | None, value: bytes | None,
+) -> int:
+    """``len(encode_record_v2(offset_delta, 0, key, value))``, from the
+    varint table without encoding the record."""
+    body = 3 + _varint_size(offset_delta)  # attributes, timestamp 0, 0 headers
+    for blob in (key, value):
+        body += 1 if blob is None else _varint_size(len(blob)) + len(blob)
+    return _varint_size(body) + body
+
+
+def _encode_records(
+    messages: list[tuple[bytes | None, bytes | None]],
+) -> bytes:
+    """The records of a batch, ``b"".join(encode_record_v2(i, 0, k, v)
+    for i, (k, v) in enumerate(messages))``, built in one pass: every
+    varint comes from ``_VARINTS`` (``encode_varint`` past its end) and
+    every part goes into one list joined once."""
+    varints, n_varints = _VARINTS, _N_VARINTS
+    parts: list[bytes] = []
+    for delta, (key, value) in enumerate(messages):
+        delta_bytes = (varints[delta] if delta < n_varints
+                       else encode_varint(delta))
+        if key is None:
+            klen, key = b"\x01", b""          # zigzag(-1)
+        else:
+            n = len(key)
+            klen = varints[n] if n < n_varints else encode_varint(n)
+        if value is None:
+            vlen, value = b"\x01", b""
+        else:
+            n = len(value)
+            vlen = varints[n] if n < n_varints else encode_varint(n)
+        n = (3 + len(delta_bytes) + len(klen) + len(key)
+             + len(vlen) + len(value))
+        # length, attributes 0, timestampDelta 0, offsetDelta, key,
+        # value, 0 headers
+        parts += (varints[n] if n < n_varints else encode_varint(n),
+                  b"\x00\x00", delta_bytes, klen, key, vlen, value, b"\x00")
+    return b"".join(parts)
 
 
 # RecordBatch attribute bits 0-2: compression codec (protocol guide).
@@ -628,10 +692,7 @@ def encode_record_batch_v2(
     assigns the real one) and the log position on the FETCH side, where
     the broker re-encodes its log with the offsets it assigned
     (sources/kafka_fetch.py)."""
-    records = b"".join(
-        encode_record_v2(i, 0, k, v) for i, (k, v) in enumerate(messages)
-    )
-    records, attrs = _compress_records(records, compression)
+    records, attrs = _compress_records(_encode_records(messages), compression)
     n = len(messages)
     crc_span = (
         struct.pack(
@@ -687,29 +748,80 @@ def _parse_one_record_batch(
     r.i32()                                        # baseSequence
     count = r.i32()
     codec = attrs & _CODEC_MASK
-    if codec != _CODEC_NONE:
-        # the records block (everything after the fixed header) is one
-        # compressed stream; CRC above already covered the COMPRESSED
-        # bytes. gzip/snappy/zstd decode; lz4/unknown are loud errors.
-        r = _Reader(_decompress_records(r.take(len(buf) - r._i), codec))
+    if codec == _CODEC_NONE:
+        return _parse_records(buf, r._i, count, base_offset)
+    # the records block (everything after the fixed header) is one
+    # compressed stream; CRC above already covered the COMPRESSED
+    # bytes. gzip/snappy/zstd decode; lz4/unknown are loud errors.
+    records = _decompress_records(buf[r._i:], codec)
+    return _parse_records(records, 0, count, base_offset)
+
+
+def _parse_records(
+    buf: bytes, i: int, count: int, base_offset: int,
+) -> list[tuple[int, bytes | None, bytes | None]]:
+    """Decode ``count`` Records from ``buf[i:]`` in one pass over the
+    bytes: one-byte varints (values -64..63) are read inline, longer
+    ones by ``_varint_at``; keys and values are sliced once, headers
+    skipped by length. Each record's fields must end inside its length
+    prefix. The index only moves forward, so a field read past its
+    record's end is caught once, after the record."""
+    end = len(buf)
     out: list[tuple[int, bytes | None, bytes | None]] = []
-    for _ in range(count):
-        length = decode_varint(r)
-        rec = _Reader(r.take(length))
-        rec.i8()                                   # record attributes
-        decode_varint(rec)                         # timestampDelta
-        offset_delta = decode_varint(rec)
-        klen = decode_varint(rec)
-        key = None if klen < 0 else rec.take(klen)
-        vlen = decode_varint(rec)
-        value = None if vlen < 0 else rec.take(vlen)
-        for _h in range(decode_varint(rec)):
-            hklen = decode_varint(rec)
-            rec.take(hklen)
-            hvlen = decode_varint(rec)
-            if hvlen > 0:
-                rec.take(hvlen)
-        out.append((base_offset + offset_delta, key, value))
+    append = out.append
+    try:
+        for _ in range(count):
+            b = buf[i]
+            if b < 0x80:
+                length, i = (b >> 1) ^ -(b & 1), i + 1
+            else:
+                length, i = _varint_at(buf, i, end)
+            rec_end = i + length
+            if length < 0 or rec_end > end:
+                raise ValueError("truncated Kafka frame")
+            i += 1                                 # record attributes
+            if buf[i] < 0x80:                      # timestampDelta
+                i += 1
+            else:
+                _ts, i = _varint_at(buf, i, rec_end)
+            b = buf[i]
+            if b < 0x80:
+                delta, i = (b >> 1) ^ -(b & 1), i + 1
+            else:
+                delta, i = _varint_at(buf, i, rec_end)
+            b = buf[i]
+            if b < 0x80:
+                n, i = (b >> 1) ^ -(b & 1), i + 1
+            else:
+                n, i = _varint_at(buf, i, rec_end)
+            if n < 0:
+                key = None
+            else:
+                key, i = buf[i:i + n], i + n
+            b = buf[i]
+            if b < 0x80:
+                n, i = (b >> 1) ^ -(b & 1), i + 1
+            else:
+                n, i = _varint_at(buf, i, rec_end)
+            if n < 0:
+                value = None
+            else:
+                value, i = buf[i:i + n], i + n
+            if buf[i]:                             # headers
+                n_headers, i = _varint_at(buf, i, rec_end)
+                for _h in range(n_headers):
+                    n, i = _varint_at(buf, i, rec_end)   # key length
+                    i += max(n, 0)
+                    n, i = _varint_at(buf, i, rec_end)   # value length
+                    i += max(n, 0)
+            else:
+                i += 1
+            if i > rec_end:
+                raise ValueError("truncated Kafka frame")
+            append((base_offset + delta, key, value))
+            i = rec_end
+    except IndexError:
+        raise ValueError("truncated Kafka frame") from None
     return out
 
 

@@ -84,8 +84,8 @@ from hyperswitch_data_backfill_spark.sinks.kafka_wire import (
 )
 from hyperswitch_data_backfill_spark.sinks.kafka_wire_v2 import (
     encode_record_batch_v2,
-    encode_record_v2,
     parse_record_batches_v2,
+    record_size_v2,
 )
 
 _log = logging.getLogger(__name__)
@@ -275,12 +275,12 @@ def encode_log_slice(
             total += len(frame)
         return out.getvalue()
     # v4: one magic-2 batch over the budget-selected prefix. Record
-    # sizes are measured on the actual varint encoding, so the budget
-    # is honest; the batch is then encoded once over the chosen count.
+    # sizes are the exact varint encoding's, computed without encoding,
+    # so the budget is honest; the batch is encoded once over the count.
     total = _BATCH_HEADER_BYTES
     count = 0
     for i, (key, value) in enumerate(span):
-        rec_len = len(encode_record_v2(i, 0, key, value))
+        rec_len = record_size_v2(i, key, value)
         if count and total + rec_len > max_bytes:
             break
         total += rec_len

@@ -44,6 +44,21 @@ def test_rotation_tool_suggests_valid_window():
             assert pos < first_green
 
 
+def test_no_tool_hard_codes_an_absolute_checkout_path():
+    """A tool finds the package next to itself: one run from another
+    checkout (a parent copy for a before/after plan dump) must import
+    that checkout's code, not this one's. So no tool names this
+    checkout's absolute path, and none puts an absolute literal on
+    ``sys.path``."""
+    import re
+
+    literal_on_path = re.compile(r"sys\.path\.(insert|append)\([^)]*[\"']/")
+    for tool in sorted((REPO / "tools").glob("*.py")):
+        src = tool.read_text()
+        assert str(REPO) not in src, tool.name
+        assert not literal_on_path.search(src), tool.name
+
+
 def test_make_bigsf_preserves_schema_and_integrity(tmp_path):
     dst = str(tmp_path / "sf2x")
     r = subprocess.run(

@@ -12,8 +12,9 @@ Usage: python tools/inventory.py  (writes INVENTORY.md)
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def first_sentence(doc: str, limit: int = 160) -> str:
@@ -57,7 +58,7 @@ def main() -> int:
     for name, mode, win, doc in sorted(rows):
         lines.append(f"| `{name}` | {mode} | {win} | {doc} |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/INVENTORY.md", "w") as f:
+    with open(Path(__file__).resolve().parent.parent / "INVENTORY.md", "w") as f:
         f.write(out)
     print(f"wrote INVENTORY.md: {len(rows)} rows")
     return 0

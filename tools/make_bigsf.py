@@ -19,7 +19,7 @@ original) and schema (DuckDB reads/writes the same parquet types):
   per component) so ANN sees new points near the manifold.
 
 Usage: python tools/make_bigsf.py [src_dir] [dst_dir] [factor] [row_group_size]
-Default: /root/testdata/sf0.1 -> /root/repo/.benchdata/sf1, x10, auto
+Default: the sf0.1 fixture -> .benchdata/sf1 in this checkout, x10, auto
 
 row_group_size controls parquet row-group width — Spark's indivisible
 split unit. The driver fixtures are one row group per table, which
@@ -37,13 +37,14 @@ models the production property that matters (a scan is many
 independent, non-trivial splits) at fixture byte sizes. An integer
 forces a uniform width (122880 reproduces the old DuckDB default).
 
-Then:    SPARK_GRAFT_SF_DIR=/root/repo/.benchdata/sf1 python bench.py
+Then:    SPARK_GRAFT_SF_DIR=.benchdata/sf1 python bench.py
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 
@@ -67,7 +68,8 @@ MIN_GROUP_BYTES = 1 << 20  # floor: ~1 MB of rows per group
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dst = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.benchdata/sf1"
+    dst = (sys.argv[2] if len(sys.argv) > 2
+           else str(Path(__file__).resolve().parent.parent / ".benchdata" / "sf1"))
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     rg_arg = sys.argv[4] if len(sys.argv) > 4 else "auto"
     os.makedirs(dst, exist_ok=True)

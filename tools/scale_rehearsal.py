@@ -22,9 +22,10 @@ Usage: python tools/scale_rehearsal.py [sf_dir] [factors...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 from pyspark.sql.window import Window  # noqa: E402

@@ -17,9 +17,10 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 # Keys registered by these modules are server/stream fixtures, not
 # batch operators — their wall is dominated by trigger intervals and

@@ -25,6 +25,9 @@ import os
 import subprocess
 import sys
 import time
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
 
 STAGES_FULL = (
     ("workflow-lint", [sys.executable, "tools/check_workflow.py"]),
@@ -39,7 +42,7 @@ def main() -> int:
     quick = "--quick" in sys.argv
     stages = list(STAGES_FULL[:3] if quick else STAGES_FULL)
     if "--sf1" in sys.argv and not quick:
-        sf1 = "/root/repo/.benchdata/sf1"
+        sf1 = str(ROOT / ".benchdata" / "sf1")
         if not os.path.exists(f"{sf1}/lineitem.parquet"):
             stages.append(("make-sf1", [sys.executable, "tools/make_bigsf.py"]))
         stages.append(
@@ -49,8 +52,8 @@ def main() -> int:
         t0 = time.time()
         env = dict(os.environ)
         if name == "bench-sf1":
-            env["SPARK_GRAFT_SF_DIR"] = "/root/repo/.benchdata/sf1"
-        r = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo", env=env)
+            env["SPARK_GRAFT_SF_DIR"] = sf1
+        r = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT, env=env)
         wall = time.time() - t0
         tail = (r.stdout or r.stderr).strip().splitlines()[-1:] or [""]
         ok = r.returncode == 0 and (
