@@ -19,7 +19,9 @@ sweep read ~20% above the builder's idle number):
   BENCH_r*.json is re-timed min-of-5 in a fresh JVM and
   ``value_adjusted`` substitutes those mins — the official
   round-over-round number lives IN the artifact, not in
-  BENCH_NOTES archaeology; ``contended`` demotes only the raw walls;
+  BENCH_NOTES archaeology; ``contended`` demotes only the raw walls.
+  Each isolated entry carries its ``min_sec``, the ``loadavg`` after its
+  runs and its own ``contended`` flag (same CONTENTION_LOADAVG);
 - ``python bench.py --reconcile`` additionally diffs this run against
   the newest committed BENCH_r*.json, min-of-8-isolates every >10%
   slowdown mover via tools/bench_reconcile.py, and appends the verdict
@@ -236,7 +238,14 @@ def _attach_isolated(record: dict) -> None:
             except (ValueError, LookupError, KeyError):
                 iso.setdefault("errors", []).append(q)
                 continue
-            iso["queries"][q] = min_sec
+            # the isolated runs' host load, so a contended minimum is
+            # read as one (None: the harness reported no loadavg)
+            load = parsed.get("loadavg")
+            iso["queries"][q] = {
+                "min_sec": min_sec,
+                "loadavg": load,
+                "contended": load[0] > CONTENTION_LOADAVG if load else None,
+            }
             if min_sec < adjusted[q]:
                 adjusted[q] = min_sec
     record["isolated"] = iso

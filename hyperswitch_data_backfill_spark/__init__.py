@@ -13,8 +13,10 @@ Design stance (see SURVEY.md §7): declarative DataFrame programs all the
 way down; Catalyst does predicate pushdown / pruning / join planning; we
 only add engine code where Spark has no primitive (per-merchant JDBC
 predicate lists, decrypt UDF key distribution, LSH bucket layout).
+
+Sessions come from ``hyperswitch_data_backfill_spark.session``
+(``get_spark``, ``prepare_session``). This module imports nothing: the
+Python worker daemon (``worker_daemon``) is started as a submodule of
+this package and must choose where PySpark comes from before anything
+imports it.
 """
-
-from hyperswitch_data_backfill_spark.session import get_spark, prepare_session
-
-__all__ = ["get_spark", "prepare_session"]

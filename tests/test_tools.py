@@ -391,7 +391,8 @@ def test_bench_attach_isolated_contract(monkeypatch):
 
     class _Out:
         returncode = 0
-        stdout = '{"query": "a", "min_sec": 1.05, "runs": [1.05]}'
+        stdout = ('{"query": "a", "min_sec": 1.05, "runs": [1.05], '
+                  '"loadavg": [2.5, 1.0, 0.5]}')
         stderr = ""
 
     def fake_run(cmd, **kw):
@@ -403,8 +404,20 @@ def test_bench_attach_isolated_contract(monkeypatch):
     r = dict(record)
     bench_mod._attach_isolated(r)
     assert len(calls) == 1 and "a" in calls[0]
-    assert r["isolated"]["queries"] == {"a": 1.05}
+    # the isolated min carries its host load; 1-min 2.5 > CONTENTION_LOADAVG
+    assert r["isolated"]["queries"] == {"a": {
+        "min_sec": 1.05, "loadavg": [2.5, 1.0, 0.5], "contended": True}}
     assert r["value_adjusted"] == round(1.05 + 1.0 + 0.5 + 1.0, 3)
+    _Out.stdout = ('{"query": "a", "min_sec": 1.05, "runs": [1.05], '
+                   '"loadavg": [0.4, 1.0, 0.5]}')
+    r = dict(record)
+    bench_mod._attach_isolated(r)
+    assert r["isolated"]["queries"]["a"]["contended"] is False
+    _Out.stdout = '{"query": "a", "min_sec": 1.05, "runs": [1.05]}'
+    r = dict(record)
+    bench_mod._attach_isolated(r)
+    assert r["isolated"]["queries"]["a"] == {
+        "min_sec": 1.05, "loadavg": None, "contended": None}
 
     # the cap is logged, never silent
     monkeypatch.setattr(
