@@ -10,14 +10,15 @@ reference main.rs:190-313) gets the same operations parameterized the
 way `pandas.merge_asof` / `MERGE INTO` / `ANALYZE` users expect.
 
 The as-of, per-group, upsert, SCD-2, snapshot-diff, sessionize,
-histogram, stable-split, BM25 and PageRank kernels are the ONLY
-implementation of their capability: the registered keys that pin them
-(join_asof, compact_latest, scd2_apply, text_bm25, graph_pagerank …)
+histogram, stable-split, BM25, PageRank, ANN top-k, incremental-dedup
+and clean-corpus kernels are the ONLY implementation of their
+capability: the registered keys that pin them (join_asof,
+compact_latest, scd2_apply, text_bm25, graph_pagerank, sim_topk …)
 are thin adapters that load the fixture tables, call the kernel and
 rename its output to the oracle's columns — so each kernel is checked
 against its DuckDB oracle through its key. The other kernels (near-
-dup, ANN, incremental dedup, clean-corpus, apply-changes) still sit
-beside registered ops with bodies of their own, or wrap their helpers.
+dup, apply-changes) still sit beside registered ops with bodies of
+their own, or wrap their helpers.
 tests/test_api.py pins the kernels two ways:
 
 - equivalence: the kernel call each adapter makes (or, for a kernel
@@ -340,35 +341,36 @@ def snapshot_diff(
     keys = _names(key_cols)
     if compare_cols is None:
         compare_cols = [c for c in old.columns if c not in keys]
-    # side membership is decided by marker columns, not value
-    # nullability — an all-NULL attribute row is still "present"
+    # Only the old side needs a marker: a new row is present iff its own
+    # key came through the join non-NULL. An old row with a NULL key and
+    # all-NULL attributes comes out all NULL, like a new-only row's
+    # absent old side, so it cannot go without one.
     o = old.select(
-        *keys, *[F.col(c).alias(f"old_{c}") for c in compare_cols]
-    ).withColumn("__old", F.lit(True))
+        *keys, *[F.col(c).alias(f"old_{c}") for c in compare_cols],
+        F.lit(True).alias("__old"),
+    )
     n = new.select(
-        *keys, *[F.col(c).alias(f"new_{c}") for c in compare_cols]
-    ).withColumn("__new", F.lit(True))
-    joined = o.join(n, keys, "full_outer")
+        *[F.col(k).alias(f"__new_{k}") for k in keys],
+        *[F.col(c).alias(f"new_{c}") for c in compare_cols],
+    )
+    joined = o.join(
+        n, [F.col(k) == F.col(f"__new_{k}") for k in keys], "full_outer"
+    )
+    inserted = F.col("__old").isNull()
+    deleted = F.col(f"__new_{keys[0]}").isNull()
     op = (
-        F.when(F.col("__old").isNull(), F.lit("insert"))
-        .when(F.col("__new").isNull(), F.lit("delete"))
+        F.when(inserted, F.lit("insert"))
+        .when(deleted, F.lit("delete"))
         .otherwise(F.lit("update"))
     )
     changed = F.lit(False)
     for c in compare_cols:
         changed = changed | ~F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}"))
-    return (
-        joined.select(
-            *keys,
-            op.alias("op"),
-            *[F.col(f"old_{c}") for c in compare_cols],
-            *[F.col(f"new_{c}") for c in compare_cols],
-            F.col("__old").isNull().alias("__ins"),
-            F.col("__new").isNull().alias("__del"),
-            changed.alias("__chg"),
-        )
-        .filter(F.col("__ins") | F.col("__del") | F.col("__chg"))
-        .drop("__ins", "__del", "__chg")
+    return joined.filter(inserted | deleted | changed).select(
+        *[F.coalesce(k, f"__new_{k}").alias(k) for k in keys],
+        op.alias("op"),
+        *[F.col(f"old_{c}") for c in compare_cols],
+        *[F.col(f"new_{c}") for c in compare_cols],
     )
 
 
@@ -514,19 +516,22 @@ def ann_topk(
     lsh_bits: int = 6,
     lsh_probes: int | None = None,
 ) -> DataFrame:
-    """Top-k nearest neighbours by cosine for every query vector
-    (operators/similarity.py sim_exact_small / sim_topk made generic —
-    any embedding width, any id/vector column names).
+    """Top-k nearest neighbours by cosine for every query vector, any
+    embedding width and id/vector column names (the sim_exact_small and
+    sim_topk keys are adapters over it).
 
     - ``method="exact"``: brute force — norms folded ONCE per side
       before the broadcast cross join pays only the dot product;
       correct at any dimension, O(|corpus|·|queries|) scoring. The
       oracle path; right whenever |queries| is small.
-    - ``method="lsh"``: multi-table random-hyperplane LSH — one Arrow
-      matmul per batch buckets both sides (plane matrix re-derived per
-      executor from seeds, batch-derived dim), candidates meet in a
-      bucket equi-join (never a cross join), multi-table collisions
-      collapse before the exact re-rank. Recall is tuned by
+    - ``method="lsh"``: multi-table random-hyperplane LSH — the corpus
+      side is spread across cores (``catalog.spread_fanout``), one
+      Arrow matmul per batch buckets both sides (plane matrix
+      re-derived per executor from seeds, batch-derived dim),
+      candidates meet in a bucket equi-join (never a cross join) and
+      are scored there; multi-table collisions collapse with a max
+      over the scalar score, so that shuffle never carries vectors.
+      Recall is tuned by
       (lsh_tables, lsh_bits) plus ``lsh_probes`` query-side
       multi-probes (r12; default = similarity.SIM_TOPK_PROBES — the
       QUERY side also lands in its lowest-|margin| bit-flip buckets,
@@ -539,6 +544,7 @@ def ann_topk(
     sharing an id namespace). Output columns: ``q_id``, ``{id_col}``,
     ``cos_sim`` (rounded to 6dp), ``rk`` (1..k).
     """
+    from .catalog import spread_fanout
     from .functions.arrays import dot, norm
     from .operators.similarity import (
         SIM_TOPK_PROBES,
@@ -549,6 +555,8 @@ def ann_topk(
     if method not in ("exact", "lsh"):
         raise ValueError(f"method must be exact|lsh, got {method!r}")
     qid = query_id_col or id_col
+    if method == "lsh":
+        corpus = spread_fanout(corpus, id_col)
     c = corpus.select(
         F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("__nrm")
     )
@@ -582,9 +590,7 @@ def ann_topk(
             F.col("__tb").bitwiseAND(F.lit((1 << lsh_bits) - 1))
             .cast("int").alias("__bucket"),
         )
-        cand = c.join(F.broadcast(q), ["__tbl", "__bucket"]).dropDuplicates(
-            ["q_id", id_col]
-        )
+        cand = c.join(F.broadcast(q), ["__tbl", "__bucket"])
     else:
         cand = c.crossJoin(F.broadcast(q))
     if exclude_self:
@@ -598,6 +604,11 @@ def ann_topk(
             6,
         ).alias("cos_sim"),
     )
+    if method == "lsh":
+        # ArrowEvalPython drops the spread's hash layout, so this
+        # aggregate keeps its exchange; it carries scalars with a
+        # map-side partial max
+        scored = scored.groupBy("q_id", id_col).agg(F.max("cos_sim").alias("cos_sim"))
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
@@ -783,8 +794,8 @@ def dedup_incremental(
     text_col: str = "text",
     fp_col: str = "fp",
 ) -> tuple[DataFrame, DataFrame]:
-    """Incremental exact dedup — the daily-curation path
-    (operators/dedup.py dedup_incremental_exact made generic).
+    """Incremental exact dedup — the daily-curation path (the
+    dedup_incremental_exact key is an adapter over it).
 
     Returns ``(survivors, new_seen_fp)``:
 
@@ -848,9 +859,9 @@ def clean_corpus(
 ) -> DataFrame:
     """The curation funnel as ONE composable call: quality gate → exact
     dedup (keep-first) → benchmark decontamination → deterministic
-    split — the stage order every LLM-corpus pipeline runs
-    (text.pipeline_clean_corpus + corpus.decontam_ngram + stable_split
-    made generic over caller-named columns).
+    split — the stage order every LLM-corpus pipeline runs, over
+    caller-named columns (the pipeline_clean_corpus key is an adapter
+    over it; decontam_ngram keeps its own body, as it does not dedup).
 
     - Gate: length in [min_chars, max_chars], ≥ min_tokens whitespace
       tokens, unique-token ratio ≥ min_unique_ratio (all pure codegen —
@@ -870,8 +881,8 @@ def clean_corpus(
       never moves as the corpus grows.
 
     Returns the surviving rows with all input columns (+ ``split_col``
-    when splitting). Laws pinned in tests/test_api.py: equivalence with
-    the registered pipeline_clean_corpus on the fixture corpus,
+    when splitting). Laws pinned in tests/test_api.py: with the gate
+    off, decontam_ngram's survivors reduced to the min id per text,
     no-duplicate-text/min-id-survivor, zero shared n-grams with the
     benchmark after decontamination, and gate monotonicity."""
     from .operators.dedup import bounded_broadcast
@@ -919,7 +930,7 @@ def clean_corpus(
             .distinct()
         )
         # hit is near-dup-sized (contaminated ids) — left UNHINTED like
-        # the registered decontam_ngram twin: AQE broadcasts a small id
+        # the registered decontam_ngram's: AQE broadcasts a small id
         # set on its own, and a bounded_broadcast count here would
         # execute the whole corpus-side decontam pipeline a second time
         # at plan-construction (measured double work).

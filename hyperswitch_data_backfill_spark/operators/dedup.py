@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hyperswitch_data_backfill_spark import api
 from hyperswitch_data_backfill_spark.catalog import load_table, spread_fanout
 from hyperswitch_data_backfill_spark.registry import register
 
@@ -1268,21 +1269,15 @@ INCR_BATCH_MOD = 5
 )
 def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    batch = docs.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
     hist_fp = (
         docs.filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
         .select(F.md5("text").alias("fp"))
         .distinct()
     )
-    w = Window.partitionBy("text").orderBy("doc_id")
-    batch_first = (
-        batch.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .withColumn("fp", F.md5("text"))
+    survivors, _ = api.dedup_incremental(
+        docs.filter(F.col("doc_id") % INCR_BATCH_MOD == 0), hist_fp
     )
-    return batch_first.join(hist_fp, "fp", "left_anti").select(
-        "doc_id", "source", "n_chars"
-    )
+    return survivors.select("doc_id", "source", "n_chars")
 
 
 @register(

@@ -7,13 +7,16 @@ Three operators over ``embeddings(vec_id, embedding array<float>, label)``:
   the corpus once; per-partition top-k via window rank. Cost is
   O(|Q|·N·d) FLOPs with zero shuffle of the corpus — fine whenever |Q|
   is small, at any corpus size.
-- ``sim_topk`` — the scale path: random-hyperplane LSH (16-bit
-  signatures). Corpus and queries hash to buckets; candidates are
-  bucket-colocated only, so the join is bucket-equi, never cross.
-  Approximate → rows-only check.
+- ``sim_topk`` — the scale path: multi-table random-hyperplane LSH.
+  Corpus and queries hash to buckets; candidates are bucket-colocated
+  only, so the join is bucket-equi, never cross. Approximate →
+  rows-only check.
 - ``neardup_cosine`` — embedding near-duplicate pairs above a cosine
   threshold with label blocking (the realistic pipeline blocks on a
   cheap key — cluster/lang/shard — before pairing).
+
+The two top-k keys are adapters over ``api.ann_topk`` (``method="exact"``
+and ``method="lsh"``), which holds their plan.
 
 All vector math is codegen'd higher-order functions (functions/arrays.py)
 — double-widened, sequential fold, rounded to 6dp at comparison points.
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hyperswitch_data_backfill_spark import api
 from hyperswitch_data_backfill_spark.catalog import load_table, spread_fanout
 from hyperswitch_data_backfill_spark.functions.arrays import dot, norm
 from hyperswitch_data_backfill_spark.registry import register
@@ -72,31 +76,10 @@ DIM = 64
         "one corpus scan, per-query rank. The oracle for the ANN variants.",
 )
 def sim_exact_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Norms are computed ONCE per vector before the pair join — the
-    # cross product then pays only the dot product. Same fold, same
-    # values (cosine = dot/(norm_a·norm_b) either way); at N corpus ×
-    # Q queries this is O(N+Q) norm folds instead of O(N·Q).
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nrm", norm(F.col("embedding"))
+    emb = load_table(spark, sf_dir, "embeddings")
+    return api.ann_topk(
+        emb, emb.filter(F.col("vec_id") < N_QUERIES), k=TOP_K, method="exact"
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= TOP_K)
 
 
 def _hyperplanes(seed: int = 0, bits: int = LSH_BITS, dim: int = DIM) -> list[list[float]]:
@@ -506,71 +489,11 @@ def lsh_cosine_pairs(
         "test_quality_guards.py).",
 )
 def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Spread the single-file scan across cores before the vector math
-    # (same rationale as dedup.shingles_df). Corpus side only: the query
-    # side is N_QUERIES rows — spreading it buys nothing and costs a
-    # full exchange stage (r16 measurement).
-    raw = load_table(spark, sf_dir, "embeddings")
-    emb = spread_fanout(raw, "vec_id")
-    banded = emb.withColumn("nrm", norm(F.col("embedding"))).select(
-        "vec_id", "embedding", "nrm",
-        F.posexplode(lsh_buckets_udf(F.col("embedding"))).alias("tbl", "bucket"),
+    emb = load_table(spark, sf_dir, "embeddings")
+    return api.ann_topk(
+        emb, emb.filter(F.col("vec_id") < N_QUERIES), k=TOP_K,
+        method="lsh", lsh_tables=LSH_TABLES, lsh_bits=LSH_BITS,
     )
-    # Query-side multi-probe (r12): each query ALSO probes the buckets
-    # reached by flipping its SIM_TOPK_PROBES lowest-|margin| signature
-    # bits per table — the classic asymmetric multi-probe trade: the
-    # corpus banding (the 100 TB side) is untouched, only the
-    # broadcast-sized query side fans out ×(1+probes), and candidates
-    # stay bucket-equi. Measured recall@10: 0.287 → 0.762 at sf0.01.
-    q = (
-        raw.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("nrm", norm(F.col("embedding")))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            F.explode(
-                lsh_pair_buckets_udf(
-                    F.col("embedding"), LSH_TABLES, LSH_BITS, SIM_TOPK_PROBES
-                )
-            ).alias("tb"),
-        )
-        .select(
-            "q_id", "q_emb", "q_nrm",
-            F.shiftright("tb", LSH_BITS).cast("int").alias("tbl"),
-            F.col("tb").bitwiseAND(F.lit((1 << LSH_BITS) - 1))
-            .cast("int").alias("bucket"),
-        )
-    )
-    # Score at the join, THEN collapse multi-table collisions on the
-    # scalar: the same (q_id, vec_id) pair joins identical arrays in
-    # every colliding table, so cos_sim is bit-identical across
-    # duplicates and max() is exactly the dropDuplicates value. The
-    # dedup aggregate KEEPS its exchange (r17 comment fix — the r16
-    # text overclaimed elision): ArrowEvalPython does not preserve its
-    # child's outputPartitioning in Spark 4.1.2, so the corpus spread's
-    # hash(vec_id) layout is lost at the banding UDF — and on the
-    # spread_fanout pass-through path at scale there is no repartition
-    # to inherit in the first place. The win is the payload: that
-    # exchange now carries (long, long, double) with a map-side
-    # partial max instead of two 64-float arrays through a
-    # SortAggregate pair (guide §2.3 "shuffle metadata, not payloads";
-    # r16 plan diff: 5 exchanges → 4 — the removed one is the
-    # query-side spread — 3 sorts → 1).
-    cand = (
-        banded.join(F.broadcast(q), ["tbl", "bucket"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id", "vec_id",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 6
-            ).alias("cos_sim"),
-        )
-        .groupBy("q_id", "vec_id")
-        .agg(F.max("cos_sim").alias("cos_sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return cand.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= TOP_K)
 
 
 IVF_K = 16  # centroids (cells)

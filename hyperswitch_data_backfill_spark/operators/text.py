@@ -241,28 +241,9 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is the 100 TB cost structure.",
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    n_uniq = F.size(F.array_distinct(toks))
-    quality = (
-        F.when(F.length("text").between(50, 10000), 1).otherwise(0)
-        + F.when(n_tokens >= 10, 1).otherwise(0)
-        + F.when(n_uniq.cast("double") / n_tokens >= 0.3, 1).otherwise(0)
-    )
-    kept = docs.filter(quality == 3)
-    w = Window.partitionBy("text").orderBy("doc_id")
-    deduped = (
-        kept.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    )
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint") % 100
-    return deduped.select(
-        "doc_id", "lang", "n_chars",
-        F.when(bucket < 90, F.lit("train")).otherwise(F.lit("eval")).alias("split"),
+    return api.clean_corpus(docs, splits={"train": 0.9, "eval": 0.1}).select(
+        "doc_id", "lang", "n_chars", "split"
     )
 
 

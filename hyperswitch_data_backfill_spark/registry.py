@@ -131,7 +131,17 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 # each run one loop over a batch's bytes (varint table, index
 # arithmetic), under every v3 produce and v4 fetch key; these four
 # ride them through the producer, the broker double and the consumer.
+# ANN/dedup/clean-corpus pass: the two top-k keys, incremental exact
+# dedup and the clean-corpus funnel are now adapters over api.ann_topk,
+# dedup_incremental and clean_corpus (sim_topk_recall_floor runs both
+# top-k keys); ann_topk's LSH branch took sim_topk's plan, and
+# snapshot_diff dropped its new-side marker (cdc_snapshot_diff, listed).
 _WINDOW_PREPEND: tuple[str, ...] = (
+    "sim_exact_small",
+    "sim_topk",
+    "sim_topk_recall_floor",
+    "dedup_incremental_exact",
+    "pipeline_clean_corpus",
     "kafka_wire_v2_roundtrip",
     "kafka_wire_fetch_roundtrip",
     "stream_kafka_wire_tumbling",
@@ -188,10 +198,15 @@ def _shipped_evidence_rounds() -> list[int]:
 # matches neither and fails.
 _WINDOW_EVIDENCE_ROUND: int = max(_shipped_evidence_rounds(), default=0)
 
-# ONE-PASS RECORD-BATCH WINDOW = rotation output at evidence pin r17 with
-# the twenty-eight changed-implementation prepends above, then the r13
-# and r14 cohorts oldest-evidence-first.
+# ANN/DEDUP/CLEAN-CORPUS WINDOW = rotation output at evidence pin r17
+# with the thirty-three changed-implementation prepends above, then the
+# r13 and r14 cohorts oldest-evidence-first.
 _DRIVER_WINDOW: list[str] = [
+    "sim_exact_small",  # green r15
+    "sim_topk",  # rows_only r16
+    "sim_topk_recall_floor",  # green r13
+    "dedup_incremental_exact",  # green r15
+    "pipeline_clean_corpus",  # green r14
     "kafka_wire_v2_roundtrip",  # green r15
     "kafka_wire_fetch_roundtrip",  # green r15
     "stream_kafka_wire_tumbling",  # green r15
@@ -225,7 +240,6 @@ _DRIVER_WINDOW: list[str] = [
     "remap_columns",  # green r13
     "seq_pattern_funnel",  # green r13
     "seq_pattern_funnel_sessioned",  # green r13
-    "sim_topk_recall_floor",  # green r13
     "text_collapse_runs",  # green r13
     "tpch_q3_topk",  # green r13
     "ts_gapfill",  # green r13
@@ -238,10 +252,6 @@ _DRIVER_WINDOW: list[str] = [
     "emb_random_projection",  # green r14
     "funnel_steps",  # green r14
     "json_extract",  # green r14
-    "json_extract_agg",  # green r14
-    "json_serialize",  # green r14
-    "kafka_payload_shape",  # green r14
-    "map_props_stats",  # green r14
 ]
 
 

@@ -8,7 +8,10 @@ Two layers, per the module's docstring:
    compaction, SCD-2, diff, top-k, session, histogram, split, BM25 and
    PageRank keys), the test pins the adapter's arguments and column
    renames; where the key keeps a body of its own, it pins the two
-   implementations equal.
+   implementations equal. The ANN top-k, incremental-dedup and
+   clean-corpus keys are adapters too, with no equivalence test here:
+   their oracle tests (sim_topk, rows-only: its r16 pair test and the
+   recall floors) already run the kernel on the fixture rows.
 2. LAWS — hypothesis properties on adversarial generated inputs
    (duplicate timestamps, empty sides, single keys): the algebraic
    contracts each kernel's docstring promises.
@@ -462,6 +465,45 @@ def test_snapshot_diff_reconstructs(spark):
     run()
 
 
+def test_snapshot_diff_null_keys_and_attrs(spark):
+    """Side membership survives NULLs: a NULL key joins nothing, so its
+    old row is a delete and its new row an insert, even when every
+    attribute is NULL too; a keyed row whose attributes are all NULL is
+    still present on its side. With two keys, one NULL key part is
+    enough to keep a row from matching."""
+    schema = "k long, a string, b long"
+    old = spark.createDataFrame(
+        [(None, None, None), (1, None, None), (2, None, None),
+         (3, "x", None), (5, None, None)], schema,
+    )
+    new = spark.createDataFrame(
+        [(None, None, None), (1, None, None), (3, None, None),
+         (4, None, None), (5, "y", 1)], schema,
+    )
+    got = sorted(
+        ((r["k"], r["op"], r["old_a"], r["old_b"], r["new_a"], r["new_b"])
+         for r in api.snapshot_diff(old, new, "k").collect()),
+        key=repr,
+    )
+    assert got == sorted([
+        (None, "delete", None, None, None, None),
+        (None, "insert", None, None, None, None),
+        (2, "delete", None, None, None, None),
+        (3, "update", "x", None, None, None),
+        (4, "insert", None, None, None, None),
+        (5, "update", None, None, "y", 1),
+    ], key=repr)
+
+    schema2 = "k1 long, k2 long, a string"
+    old2 = spark.createDataFrame([(1, None, None), (2, 2, None)], schema2)
+    new2 = spark.createDataFrame([(1, None, None), (2, 2, None)], schema2)
+    got2 = sorted(
+        (r["k1"], r["k2"], r["op"])
+        for r in api.snapshot_diff(old2, new2, ["k1", "k2"]).collect()
+    )
+    assert got2 == [(1, None, "delete"), (1, None, "insert")]
+
+
 def test_first_row_and_topk_laws(spark):
     """first_row_per_group returns exactly one row per key — the
     minimum under the (unique) ordering; topk returns the true top-k."""
@@ -524,44 +566,13 @@ def test_histogram_equidepth_law(spark):
     run()
 
 
-def test_ann_topk_exact_equiv(spark):
-    from hyperswitch_data_backfill_spark.operators.similarity import (
-        N_QUERIES,
-        TOP_K,
-        sim_exact_small,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    got = api.ann_topk(
-        emb, emb.filter(F.col("vec_id") < N_QUERIES), k=TOP_K, method="exact"
-    )
-    cols = ["q_id", "vec_id", "cos_sim", "rk"]
-    assert _rows(got, cols) == _rows(sim_exact_small(spark, SF_DIR), cols)
-
-
-def test_ann_topk_lsh_equiv(spark):
-    from hyperswitch_data_backfill_spark.operators.similarity import (
-        LSH_BITS,
-        LSH_TABLES,
-        N_QUERIES,
-        TOP_K,
-        sim_topk,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    got = api.ann_topk(
-        emb, emb.filter(F.col("vec_id") < N_QUERIES), k=TOP_K,
-        method="lsh", lsh_tables=LSH_TABLES, lsh_bits=LSH_BITS,
-    )
-    cols = ["q_id", "vec_id", "cos_sim", "rk"]
-    assert _rows(got, cols) == _rows(sim_topk(spark, SF_DIR), cols)
-
-
 def test_ann_topk_laws(spark):
     """exact == numpy brute force (same rounding, same tie rule); the
     LSH subset carries correct scores, respects the k bound, and an
     exact-duplicate vector is ALWAYS found (identical vectors share
-    every bucket in every table)."""
+    every bucket in every table). The LSH collapse of multi-table
+    collisions leaves each (q_id, vec_id) once and each query's ranks
+    1..n without gaps."""
     import math
     from decimal import Decimal, ROUND_HALF_UP
 
@@ -605,19 +616,34 @@ def test_ann_topk_laws(spark):
         )
         assert [t[1:] for t in got] == [t[1:] for t in want]
 
+        # LSH leg: query 1000 duplicates corpus vector 0 and query 1001
+        # the last one, so both collide with their twin in every table
+        lsh_queries = spark.createDataFrame(
+            [(1000 + j, [float(x) for x in vecs[i]])
+             for j, i in enumerate((0, len(vecs) - 1))],
+            "vec_id long, embedding array<float>",
+        )
         lsh = api.ann_topk(
-            corpus, queries, k=k, method="lsh", lsh_tables=4, lsh_bits=4
+            corpus, lsh_queries, k=k, method="lsh", lsh_tables=4, lsh_bits=4
         ).collect()
-        assert len(lsh) <= k
-        by_cos = {i: cos6(q32, np.asarray(v, dtype=np.float32).tolist())
-                  for i, v in enumerate(vecs)}
-        for r in lsh:
-            assert r["cos_sim"] == by_cos[r["vec_id"]]
-        # the duplicate of the query (corpus id 0, cosine exactly 1.0)
-        # must always be a candidate, and the rank-1 row carries cos 1.0
-        top = [r for r in lsh if r["rk"] == 1]
-        assert len(top) == 1 and top[0]["cos_sim"] == 1.0
-        assert any(r["vec_id"] == 0 or by_cos[r["vec_id"]] == 1.0 for r in lsh)
+        pairs = [(r["q_id"], r["vec_id"]) for r in lsh]
+        assert len(pairs) == len(set(pairs)), pairs
+        for j, twin in enumerate((0, len(vecs) - 1)):
+            rows = [r for r in lsh if r["q_id"] == 1000 + j]
+            assert len(rows) <= k
+            assert sorted(r["rk"] for r in rows) == list(range(1, len(rows) + 1))
+            qv = np.asarray(vecs[twin], dtype=np.float32).tolist()
+            by_cos = {i: cos6(qv, np.asarray(v, dtype=np.float32).tolist())
+                      for i, v in enumerate(vecs)}
+            for r in rows:
+                assert r["cos_sim"] == by_cos[r["vec_id"]]
+            # the query's twin (cosine exactly 1.0) must always be a
+            # candidate, and the rank-1 row carries cos 1.0
+            top = [r for r in rows if r["rk"] == 1]
+            assert len(top) == 1 and top[0]["cos_sim"] == 1.0
+            assert any(
+                r["vec_id"] == twin or by_cos[r["vec_id"]] == 1.0 for r in rows
+            )
 
     run()
 
@@ -840,23 +866,6 @@ def test_scd2_apply_probes_broadcast(spark):
     assert p.count("BroadcastHashJoin") >= 2, f"semi/anti probes not broadcast:\n{p}"
 
 
-def test_dedup_incremental_equiv(spark):
-    from hyperswitch_data_backfill_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        dedup_incremental_exact,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    batch = docs.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
-    hist = docs.filter(F.col("doc_id") % INCR_BATCH_MOD != 0)
-    seen = hist.select(F.md5("text").alias("fp")).distinct()
-    survivors, _ = api.dedup_incremental(batch, seen)
-    cols = ["doc_id", "source", "n_chars"]
-    assert _rows(survivors.select(*cols), cols) == _rows(
-        dedup_incremental_exact(spark, SF_DIR), cols
-    )
-
-
 def test_dedup_incremental_fold_law(spark):
     """Folding ANY batch partition of a corpus through dedup_incremental
     accepts exactly one survivor per distinct text — the earliest-batch,
@@ -939,43 +948,49 @@ def test_advice_r10_guards(spark):
     assert "Deduplicate" not in plan and "Aggregate" not in plan, plan
 
 
-def test_clean_corpus_equiv_pipeline(spark):
-    """Funnel equivalence: clean_corpus with the fixture thresholds and
-    a 90/10 split reproduces the registered pipeline_clean_corpus
-    (driver-hashed) row-for-row — the gate, dedup survivor, and md5
-    bucket split are the same formulas."""
-    from hyperswitch_data_backfill_spark.operators.text import (
-        pipeline_clean_corpus,
-    )
+def test_clean_corpus_decontam_equiv(spark, tmp_path):
+    """Decontam leg: clean_corpus always dedups exact texts and the
+    registered decontam_ngram does not, so with the gate off and the
+    fixture's stand-in benchmark slice the funnel keeps decontam_ngram's
+    survivors reduced to the min doc_id per text. A crafted copy of a
+    surviving text under a fresh id makes that reduction bite at every
+    scale, not only where the fixture itself repeats a text."""
+    from pyspark.sql.window import Window
 
-    docs = load_table(spark, SF_DIR, "documents")
-    got = api.clean_corpus(
-        docs, splits={"train": 0.9, "eval": 0.1}
-    ).select("doc_id", "lang", "n_chars", "split")
-    cols = ["doc_id", "lang", "n_chars", "split"]
-    assert _rows(got, cols) == _rows(pipeline_clean_corpus(spark, SF_DIR), cols)
-
-
-def test_clean_corpus_decontam_equiv(spark):
-    """Decontam leg equivalence: with the gate/split off and the
-    fixture's stand-in benchmark slice, the funnel's survivor id set
-    matches registered decontam_ngram."""
     from hyperswitch_data_backfill_spark.operators.corpus import (
         DECONTAM_BENCH_MOD,
         decontam_ngram,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
+    keep_id = decontam_ngram(spark, SF_DIR).agg(F.min("doc_id")).first()[0]
+    new_id = docs.agg(F.max("doc_id")).first()[0] + 1
+    if new_id % DECONTAM_BENCH_MOD == 0:
+        new_id += 1
+    dup = docs.filter(F.col("doc_id") == keep_id).withColumn(
+        "doc_id", F.lit(new_id).cast(dict(docs.dtypes)["doc_id"])
+    )
+    docs.unionByName(dup).write.parquet(str(tmp_path / "documents.parquet"))
+    sf_dir = str(tmp_path)
+
+    docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % DECONTAM_BENCH_MOD == 0)
     train = docs.filter(F.col("doc_id") % DECONTAM_BENCH_MOD != 0)
     got = api.clean_corpus(
         train, bench, min_chars=0, max_chars=10**9,
         min_tokens=0, min_unique_ratio=0.0,
     )
-    cols = ["doc_id", "source", "n_chars"]
-    assert _rows(got.select(*cols), cols) == _rows(
-        decontam_ngram(spark, SF_DIR), cols
+    survivors = decontam_ngram(spark, sf_dir).join(
+        docs.select("doc_id", "text"), "doc_id"
     )
+    want = survivors.withColumn(
+        "rn", F.row_number().over(Window.partitionBy("text").orderBy("doc_id"))
+    ).filter(F.col("rn") == 1)
+    assert {keep_id, new_id} <= {r["doc_id"] for r in survivors.collect()}
+    cols = ["doc_id", "source", "n_chars"]
+    want_rows = _rows(want, cols)
+    assert new_id not in {r[0] for r in want_rows}
+    assert _rows(got.select(*cols), cols) == want_rows
 
 
 def test_clean_corpus_laws(spark):
